@@ -18,15 +18,12 @@ pandas/Arrow UDFs — no per-row Python"):
   * sha256(content) — the per-row correctness invariant — uses the JVM
     builtin ``sha2`` (bit-identical to hashlib/DuckDB ``sha256`` hex);
     ``sha256_pandas`` exists to prove that equality in tests.
-An all-Arrow unpack (``unpack_envelope_arrow``) is provided for parity and
-benchmarked against the native path in bench.py.
 """
 
 from __future__ import annotations
 
 import hashlib
 import unicodedata
-from collections.abc import Iterator
 
 import pandas as pd
 from pyspark.sql import DataFrame
@@ -106,56 +103,3 @@ def unpack_envelope(df: DataFrame, normalize: bool = True) -> DataFrame:
     if normalize and "content" in cols:
         out = out.withColumn("content", normalize_content(F.col("content")))
     return out
-
-
-def unpack_envelope_arrow(df: DataFrame, normalize: bool = True) -> DataFrame:
-    """All-Arrow unpack via ``mapInPandas`` — semantic twin of
-    :func:`unpack_envelope` with every transform in one Arrow batch pass.
-
-    Slower than the native path (loses nested-column pruning) but satisfies
-    the strictest reading of the vectorized-UDF mandate; kept benchmarked.
-    """
-    cols = row_cols(df)
-    extra = [c for c in cols if c not in ("repo", "path")]
-    schema = T.StructType(
-        [f for f in df.schema.fields if f.name in META_COLS]
-        + [T.StructField("repo", T.StringType()), T.StructField("path", T.StringType())]
-        + [next(f for f in df.schema["after"].dataType.fields if f.name == c) for c in extra]
-    )
-
-    def _unpack(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            after = pdf["after"]
-            before = pdf["before"]
-
-            def field(img_row, name):
-                return None if img_row is None else img_row.get(name)
-
-            out = pdf[META_COLS].copy()
-            out["repo"] = [
-                field(a, "repo") if a is not None else field(b, "repo")
-                for a, b in zip(after, before)
-            ]
-            out["path"] = [
-                field(a, "path") if a is not None else field(b, "path")
-                for a, b in zip(after, before)
-            ]
-            for c in extra:
-                if c in ("_lww_ts", "_lww_src"):
-                    # tombstone stamps ride in the before image (see the
-                    # native twin's docstring)
-                    out[c] = [
-                        field(a, c) if field(a, c) is not None else field(b, c)
-                        for a, b in zip(after, before)
-                    ]
-                else:
-                    out[c] = [field(a, c) for a in after]
-            if normalize and "content" in out:
-                out["content"] = out["content"].map(
-                    lambda x: None
-                    if x is None
-                    else unicodedata.normalize("NFC", x).replace("\r\n", "\n")
-                )
-            yield out
-
-    return df.mapInPandas(_unpack, schema=schema)

@@ -62,39 +62,6 @@ def last_write_wins(
     return agg.select(*key_cols, *out_cols)
 
 
-def last_write_wins_join(
-    df: DataFrame,
-    key_cols: list[str] | None = None,
-    order_col: str = "lsn",
-    count_col: str | None = None,
-    extra_aggs: dict[str, F.Column] | None = None,
-) -> DataFrame:
-    """Two-phase twin of :func:`last_write_wins` that never shuffles the
-    wide row payload.
-
-    Phase 1 aggregates ONLY (key, max(order), per-key stats) — the shuffle
-    carries a few dozen bytes per key instead of the full row (for the CDC
-    table, content is ~1 KiB/row: a ~20x cut in shuffled bytes on
-    update-heavy batches). Phase 2 joins the winners back to the raw rows
-    on (key, order) with an EXPLICIT broadcast hint: leaving the choice to
-    AQE would still plan (and write) the full-width rows-side shuffle
-    before converting, defeating the point. The winner set is bounded by
-    the micro-batch's distinct keys — micro-batch-sized state, not
-    table-sized — so broadcasting is the right default for CDC batches; a
-    flow whose batches carry more distinct keys than driver memory allows
-    should configure compact_strategy="direct" instead (same bytes moved
-    as this function's shuffle-join fallback would).
-
-    Duplicate deliveries of a winner event survive the join as identical
-    copies; ``dropDuplicates(keys)`` collapses them (same tie rationale as
-    the aggregate form: duplicates carry identical payloads,
-    docs/consideration.md:52-58).
-    """
-    key_cols = key_cols or KEY_COLS
-    winners = lww_winners(df, key_cols, order_col, count_col, extra_aggs)
-    return lww_join_winners(df, winners, key_cols, order_col, broadcast=True)
-
-
 def lww_winners(
     df: DataFrame,
     key_cols: list[str] | None = None,
@@ -107,7 +74,7 @@ def lww_winners(
     The shuffle carries a few dozen bytes per key. Materializing this
     separately (persist + a scalar probe) is what lets the engine CHOOSE
     the phase-2 join strategy from the actual winner-set size instead of
-    trusting configuration (compact_strategy="auto")."""
+    trusting configuration."""
     key_cols = key_cols or KEY_COLS
     aggs = [F.max(order_col).alias(order_col)]
     if count_col:
@@ -131,7 +98,9 @@ def lww_join_winners(
     converting); ``broadcast=False`` is the degrade path for batches whose
     winner set exceeds the driver's broadcast budget — a plain shuffle join
     moving the same bytes a direct wide aggregate would, with no driver
-    OOM risk."""
+    OOM risk. Duplicate deliveries of a winner event survive the join as
+    identical copies; ``dropDuplicates(keys)`` collapses them (duplicates
+    carry identical payloads, docs/consideration.md:52-58)."""
     key_cols = key_cols or KEY_COLS
     side = F.broadcast(winners) if broadcast else winners
     joined = df.join(side, on=[*key_cols, order_col], how="inner")

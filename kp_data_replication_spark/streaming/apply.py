@@ -32,23 +32,16 @@ the same target) can neither fence nor be fenced by this stream.
 from __future__ import annotations
 
 import os
+import re
+from collections.abc import Callable, Sequence
 from dataclasses import dataclass, field
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-from ..functions.envelope import (
-    normalize_content,
-    unpack_envelope,
-    unpack_envelope_arrow,
-)
-from ..operators.compact import (
-    last_write_wins,
-    last_write_wins_join,
-    lww_join_winners,
-    lww_winners,
-)
+from ..functions.envelope import normalize_content, unpack_envelope
+from ..operators.compact import lww_join_winners, lww_winners
 from ..operators.constraints import (
     ConstraintViolationError,
     check_envelope,
@@ -83,21 +76,17 @@ class EngineConfig:
     consumer_group: str = DEFAULT_GROUP
     # NOTE: bucketing comes from the TableStore manifest (n_buckets is a
     # property of the TABLE, not the engine) — configure it on TableStore
-    arrow_unpack: bool = False  # all-Arrow unpack variant (see envelope.py)
     normalize: bool = True
     metrics: bool = True
     # explicit parallelism for the wide stages; None -> session default
     shuffle_partitions: int | None = None
-    # compaction plan: "auto" (default) materializes the slim phase-1
-    # winner stubs, probes their actual count/key-bytes, and picks
-    # broadcast vs shuffle for the join-back against broadcast_threshold —
-    # a misconfigured giant batch degrades to a shuffle join instead of
-    # OOMing the driver. "twophase" always broadcasts the winners;
-    # "direct" is the single wide hash aggregate — right for slim rows
-    compact_strategy: str = "auto"
     # autoBroadcastJoinThreshold while applying a batch: the winner set of
     # a typical micro-batch is tens of MB — worth broadcasting well past
     # Spark's 10MB default. Set None to leave the session value untouched.
+    # Also the compaction's broadcast budget: each batch materializes the
+    # slim phase-1 winner stubs, probes their actual count/key-bytes, and
+    # broadcasts the join-back only if the estimate fits — a giant batch
+    # degrades to a shuffle join instead of OOMing the driver.
     broadcast_threshold: str | None = "256m"
     # key->partition affinity contract audit: "fail" (default — a violation
     # silently risks older images overwriting newer rows), "warn", or "off"
@@ -126,136 +115,6 @@ class EngineConfig:
     # epoch; ignored under conflict_policy="lww" (a losing LWW write is
     # not a change, only the state diff knows).
     changefeed_files: bool = False
-    # streaming-maintained incremental dedup index (round-3 verdict item):
-    # when set, every micro-batch epoch ALSO advances an
-    # IncrementalDedupIndex rooted here, in the same foreachBatch loop the
-    # target table commits in. The index fences on its own writer map
-    # (last source version applied), so kill/resume covers both halves: a
-    # crash between the table commit and the index advance is healed on
-    # resume — the re-delivered batch no-ops at the table and the index
-    # catches up from its own watermark to the table's head. Pairs are not
-    # materialized per epoch here (emit_pairs is a downstream consumer
-    # choice); the index is advanced, queryable at every epoch boundary.
-    dedup_index_dir: str | None = None
-    dedup_index_buckets: int = 8
-    # streaming-maintained duplicate-CLUSTER labels
-    # (operators/clusters_incremental.py): when set (requires
-    # dedup_index_dir), every epoch also re-labels the AFFECTED components
-    # on top of the band index — the curation pipeline's consumable
-    # (cluster_view) stays fresh at every epoch boundary. Same fencing/
-    # resume contract as the index: the label store fences on the source
-    # version, so a crash between the index advance and the cluster
-    # advance is healed by catch-up (the index advance inside
-    # clusters.update() is then a fenced noop).
-    cluster_index_dir: str | None = None
-    cluster_index_buckets: int = 8
-    # streaming-maintained decontamination fingerprint index
-    # (operators/decontam_index.py): the exact-n-gram twin of the dedup
-    # index — per-doc xxhash64 shingle fingerprints advance O(changed
-    # docs) in the same epoch loop, so a NEW benchmark probes the index
-    # without ever re-tokenizing the corpus. Same fenced resume contract.
-    decontam_index_dir: str | None = None
-    decontam_index_buckets: int = 8
-    # streaming-maintained winnowing CLONE index (operators/clone_index.py):
-    # per-file selected winnowing fingerprints advance O(changed files) in
-    # the same epoch loop, so partial-clone candidates over a continuously
-    # ingesting code corpus never cost a corpus re-fingerprint. Same fenced
-    # resume contract as the dedup index.
-    clone_index_dir: str | None = None
-    clone_index_buckets: int = 8
-    # streaming-maintained per-file content-sha FORK index
-    # (operators/forks.py IncrementalForkIndex): files hash once when the
-    # changefeed delivers them, so repo-level fork sweeps scan ~40
-    # bytes/file instead of corpus text. Same fenced resume contract.
-    fork_index_dir: str | None = None
-    fork_index_buckets: int = 8
-    # streaming-maintained incremental AGGREGATE view (exact IVM,
-    # operators/agg_view.py): when agg_view_dir is set, every micro-batch
-    # epoch also advances an IncrementalAggView over the target table —
-    # the consumer-side derived state the reference keeps near its
-    # mirrored topics (docs/index.md:32-52), maintained O(changed rows)
-    # from the full-CDF changefeed in the same foreachBatch loop. Same
-    # resume contract as the dedup index: the view fences on the source
-    # version it last folded, so a crash anywhere in the epoch is healed
-    # by catch-up on the next one. agg_view_measures holds Measure
-    # objects (Python-API config, not hot-reloadable JSON).
-    agg_view_dir: str | None = None
-    agg_view_group_cols: tuple = ()
-    agg_view_measures: tuple = ()
-    agg_view_buckets: int = 8
-    # approximate distinct-count sketch (operators/sketches.py): a
-    # changefeed-maintained HLL register table advanced in the same epoch
-    # loop — O(touched groups x 256) per epoch, O(256) state per group,
-    # distinct-SEEN semantics (deletes never retract; use agg_view's
-    # count_distinct for the exact/retractable form)
-    hll_sketch_dir: str | None = None
-    hll_sketch_group_cols: tuple = ()
-    hll_sketch_value_expr: str = ""
-    hll_sketch_buckets: int = 8
-    # approximate per-key FREQUENCY sketch (operators/cms.py): a
-    # changefeed-maintained count-min register table advanced in the same
-    # epoch loop — O(touched groups x D x W) per epoch, O(1024) state per
-    # group. Linear sketch: the full-CDF feed's deletes subtract and
-    # updates retract, so the registers track the LIVE state exactly-as-
-    # recomputed (the heavy-hitter feed for skew salting and per-key rate
-    # monitoring)
-    cms_sketch_dir: str | None = None
-    cms_sketch_group_cols: tuple = ()
-    cms_sketch_value_expr: str = ""
-    cms_sketch_buckets: int = 8
-    # approximate QUANTILE sketch (operators/hdr.py): a changefeed-
-    # maintained HDR histogram advanced in the same epoch loop — linear
-    # like count-min (deletes subtract, updates retract), O(bins) state
-    # per group, integer-exact log binning with relative error <= 1/16.
-    # The p99-latency-panel view at sketch cost instead of O(n)/query.
-    hdr_sketch_dir: str | None = None
-    hdr_sketch_group_cols: tuple = ()
-    hdr_sketch_value_expr: str = ""
-    hdr_sketch_buckets: int = 8
-    # streaming-maintained incremental JOIN view (delta join,
-    # operators/join_view.py): when join_view_dir is set, every epoch also
-    # advances an IncrementalJoinView of THIS engine's table (the fact)
-    # against an independently-replicated dimension table at
-    # join_view_dim_root — the dim may advance between epochs on its own
-    # cadence; the view's two-source cursor catches both sides up to
-    # their current heads inside the same foreachBatch loop, with the
-    # same fenced kill/resume contract as the other derived stores.
-    # join_view_fk_exprs / _fact_cols / _dim_cols are ((name, expr), ...)
-    # pair tuples (dataclass-friendly form of the operator's dicts).
-    join_view_dir: str | None = None
-    join_view_dim_root: str | None = None
-    join_view_fk_exprs: tuple = ()
-    join_view_fact_cols: tuple = ()
-    join_view_dim_cols: tuple = ()
-    join_view_buckets: int = 8
-    # streaming-maintained SCD TYPE-2 timeline (operators/scd.py): when
-    # scd2_dir is set, every epoch also appends the batch's transitions
-    # to an Scd2View of the target table — one row per (key, image)
-    # with [_valid_from, _valid_to) commit-version stamps, the canonical
-    # Debezium-downstream history sink. Exact per-version maintenance
-    # (never the relaxed change-file path), same fenced kill/resume
-    # contract as the other derived stores.
-    scd2_dir: str | None = None
-    scd2_buckets: int = 8
-    # streaming-maintained inverted text index (operators/text_index.py):
-    # when text_index_dir is set, every epoch also advances the BM25
-    # postings index (merge-on-read delta layers, O(changed docs x
-    # terms/doc) per epoch, threshold-folded) and its doc-length sidecar
-    # from the target's full-CDF changefeed — same fenced kill/resume
-    # contract as the other derived stores.
-    text_index_dir: str | None = None
-    text_index_buckets: int = 8
-    # streaming-maintained n-gram LANGUAGE MODEL (operators/lm.py): when
-    # lm_counts_dir is set, every epoch also advances the bigram
-    # stupid-backoff count table from the target's full-CDF changefeed —
-    # gram counts are linear (deletes subtract, updates retract the
-    # pre-image text), so the model equals a batch retrain over the live
-    # corpus at every epoch: the continuously-fresh CCNet-style quality
-    # scorer for a continuously-ingesting corpus. Same fenced kill/resume
-    # contract as the other derived stores.
-    lm_counts_dir: str | None = None
-    lm_counts_text_col: str = "content"
-    lm_counts_buckets: int = 8
     # retention.ms (provisioning.md:188), by mechanism: rows whose
     # retention-timestamp column (epoch MILLISECONDS, like the Kafka
     # config) fell behind the window are expired every
@@ -400,8 +259,8 @@ class EngineConfig:
 # (consumer_group, conflict_policy, cluster_id, config_file itself) are
 # deliberately absent — changing them mid-stream corrupts lineage/stamps
 RELOADABLE_FIELDS = {
-    "whitelist", "blacklist", "arrow_unpack", "normalize", "metrics",
-    "shuffle_partitions", "compact_strategy", "broadcast_threshold",
+    "whitelist", "blacklist", "normalize", "metrics",
+    "shuffle_partitions", "broadcast_threshold",
     "affinity_check", "write_salt_target_keys", "changefeed_files",
     "dlq_dir", "check_constraints", "schema_policy", "smt_chain",
     "txn_timeout_epochs",
@@ -630,11 +489,10 @@ class CdcApplyEngine:
             if counts:
                 raise ConstraintViolationError(counts)
 
-        unpack = unpack_envelope_arrow if config.arrow_unpack else unpack_envelope
         # normalization runs AFTER compaction: only surviving rows pay the
         # Arrow round-trip (strictly fewer rows, identical result — the
         # winner per key is chosen by lsn, not content)
-        rows = unpack(fresh, normalize=False)
+        rows = unpack_envelope(fresh, normalize=False)
         if config.smt_chain:
             # per-record, pre-compaction (Connect semantics; see
             # EngineConfig.smt_chain). The chain may not touch the merge
@@ -715,50 +573,35 @@ class CdcApplyEngine:
         has_bytes = "content" in rows.columns
         if has_bytes:
             extra["_bytes_fresh"] = F.sum(F.length("content"))
-        winners_cached = None
-        compact_path = config.compact_strategy
-        if config.compact_strategy == "auto":
-            # materialize the slim phase-1 winners and probe their REAL
-            # size; the probe's aggregation scan is work phase 2 needed
-            # anyway (the winners side of the join) — it is paid once, into
-            # the cache — so auto costs one extra pass over cached slim
-            # stubs, not an extra raw-batch scan
-            winners_cached = lww_winners(
-                rows, order_col=order_col, count_col="_n_fresh",
-                extra_aggs=extra,
-            ).persist()
-            probe = winners_cached.agg(
-                F.count(F.lit(1)).alias("n"),
-                F.sum(
-                    F.octet_length(F.concat_ws("", F.col("repo"), F.col("path")))
-                ).alias("key_bytes"),
-            ).first()
-            n_win = probe["n"] or 0
-            # broadcast-side estimate: raw key bytes + per-row JVM/agg-col
-            # overhead, times 4 for the broadcast hash relation's expansion
-            est = 4 * (
-                (probe["key_bytes"] or 0)
-                + n_win * (16 * len(winners_cached.columns) + 48)
-            )
-            budget = _parse_size_bytes(config.broadcast_threshold) or (
-                256 << 20
-            )
-            use_broadcast = est <= budget
-            compact_path = "broadcast" if use_broadcast else "shuffle"
-            compacted = lww_join_winners(
-                rows, winners_cached, order_col=order_col,
-                broadcast=use_broadcast,
-            )
-        elif config.compact_strategy == "twophase":
-            compacted = last_write_wins_join(
-                rows, order_col=order_col, count_col="_n_fresh",
-                extra_aggs=extra,
-            )
-        else:
-            compacted = last_write_wins(
-                rows, order_col=order_col, count_col="_n_fresh",
-                extra_aggs=extra,
-            )
+        # materialize the slim phase-1 winners and probe their REAL size;
+        # the probe's aggregation scan is work phase 2 needed anyway (the
+        # winners side of the join) — it is paid once, into the cache — so
+        # choosing the join costs one extra pass over cached slim stubs,
+        # not an extra raw-batch scan
+        winners_cached = lww_winners(
+            rows, order_col=order_col, count_col="_n_fresh",
+            extra_aggs=extra,
+        ).persist()
+        probe = winners_cached.agg(
+            F.count(F.lit(1)).alias("n"),
+            F.sum(
+                F.octet_length(F.concat_ws("", F.col("repo"), F.col("path")))
+            ).alias("key_bytes"),
+        ).first()
+        n_win = probe["n"] or 0
+        # broadcast-side estimate: raw key bytes + per-row JVM/agg-col
+        # overhead, times 4 for the broadcast hash relation's expansion
+        est = 4 * (
+            (probe["key_bytes"] or 0)
+            + n_win * (16 * len(winners_cached.columns) + 48)
+        )
+        budget = _parse_size_bytes(config.broadcast_threshold) or (256 << 20)
+        use_broadcast = est <= budget
+        compact_path = "broadcast" if use_broadcast else "shuffle"
+        compacted = lww_join_winners(
+            rows, winners_cached, order_col=order_col,
+            broadcast=use_broadcast,
+        )
         compacted = compacted.withColumn(
             BUCKET_COL, bucket_expr(self.store.n_buckets)
         )
@@ -1099,8 +942,7 @@ class CdcApplyEngine:
             return summary
         finally:
             compacted.unpersist()
-            if winners_cached is not None:
-                winners_cached.unpersist()
+            winners_cached.unpersist()
 
     # ------------------------------------------------------------------ #
     @staticmethod
@@ -1641,6 +1483,7 @@ class CdcApplyEngine:
         max_bytes_per_trigger: str | None = None,
         available_now: bool = True,
         source_format: str = "parquet",
+        derived: Sequence[Callable[[SparkSession, TableStore], object]] = (),
     ):
         """Continuous tail with restart-resume (T1): file-source analogue of
         the MM2 consume loop. Rate throttling (T7, docs/perf-tests.md:166
@@ -1650,7 +1493,15 @@ class CdcApplyEngine:
         is roughly constant for a given envelope (a bytes cap admits files
         until the cap is crossed, so a batch is bounded by cap + one file).
         With ``available_now`` the query drains all pending input then
-        stops — the replay-to-caught-up mode used by tests and bench."""
+        stops — the replay-to-caught-up mode used by tests and bench.
+
+        ``derived``: changefeed consumers kept caught up in the same epoch
+        loop, each called as ``fn(spark, store)`` in list order after the
+        table commit — e.g. ``[index.update, clusters.update]`` or
+        ``[lambda s, t: view.update(s, t, dim)]``. Each store fences on its
+        own last-applied source version, so a crash between the commit and
+        an update is healed on resume: the re-delivered batch no-ops at the
+        table and the store catches up to the head."""
         if self.config.smt_chain:
             # fail at PUT, like Connect config validation: a structurally
             # bad chain (unknown type, protected column) stops the stream
@@ -1683,187 +1534,11 @@ class CdcApplyEngine:
         # resume), while a different checkpoint or a batch replay can never
         # fence this stream's never-applied batches
         writer_id = f"stream:{os.path.abspath(checkpoint_dir)}"
-        index = None
-        if self.config.dedup_index_dir:
-            from ..operators.dedup_incremental import IncrementalDedupIndex
-
-            index = IncrementalDedupIndex(
-                self.config.dedup_index_dir,
-                n_buckets=self.config.dedup_index_buckets,
-            )
-        clusters = None
-        if self.config.cluster_index_dir:
-            if index is None:
-                raise ValueError(
-                    "cluster_index_dir requires dedup_index_dir: the label "
-                    "store re-labels components over the persisted band index"
-                )
-            from ..operators.clusters_incremental import IncrementalClusterIndex
-
-            clusters = IncrementalClusterIndex(
-                self.config.cluster_index_dir,
-                index,
-                n_buckets=self.config.cluster_index_buckets,
-            )
-        hll_sketch = None
-        if self.config.hll_sketch_dir:
-            from ..operators.sketches import IncrementalHllSketch
-
-            hll_sketch = IncrementalHllSketch(
-                self.config.hll_sketch_dir,
-                list(self.config.hll_sketch_group_cols),
-                self.config.hll_sketch_value_expr,
-                n_buckets=self.config.hll_sketch_buckets,
-            )
-        cms_sketch = None
-        if self.config.cms_sketch_dir:
-            from ..operators.cms import IncrementalCmsSketch
-
-            cms_sketch = IncrementalCmsSketch(
-                self.config.cms_sketch_dir,
-                list(self.config.cms_sketch_group_cols),
-                self.config.cms_sketch_value_expr,
-                n_buckets=self.config.cms_sketch_buckets,
-            )
-        hdr_sketch = None
-        if self.config.hdr_sketch_dir:
-            from ..operators.hdr import IncrementalHdrHistogram
-
-            hdr_sketch = IncrementalHdrHistogram(
-                self.config.hdr_sketch_dir,
-                list(self.config.hdr_sketch_group_cols),
-                self.config.hdr_sketch_value_expr,
-                n_buckets=self.config.hdr_sketch_buckets,
-            )
-        join_view = None
-        join_dim = None
-        if self.config.join_view_dir:
-            if not self.config.join_view_dim_root:
-                raise ValueError(
-                    "join_view_dir requires join_view_dim_root: the view "
-                    "joins this engine's table against that dimension"
-                )
-            from ..operators.join_view import IncrementalJoinView
-
-            join_view = IncrementalJoinView(
-                self.config.join_view_dir,
-                fk_exprs=dict(self.config.join_view_fk_exprs),
-                fact_cols=dict(self.config.join_view_fact_cols),
-                dim_cols=dict(self.config.join_view_dim_cols),
-                n_buckets=self.config.join_view_buckets,
-            )
-            join_dim = TableStore(self.config.join_view_dim_root)
-        agg_view = None
-        if self.config.agg_view_dir:
-            from ..operators.agg_view import IncrementalAggView
-
-            agg_view = IncrementalAggView(
-                self.config.agg_view_dir,
-                list(self.config.agg_view_group_cols),
-                list(self.config.agg_view_measures),
-                n_buckets=self.config.agg_view_buckets,
-            )
-        decontam = None
-        if self.config.decontam_index_dir:
-            from ..operators.decontam_index import IncrementalDecontamIndex
-
-            decontam = IncrementalDecontamIndex(
-                self.config.decontam_index_dir,
-                n_buckets=self.config.decontam_index_buckets,
-            )
-        clone_index = None
-        if self.config.clone_index_dir:
-            from ..operators.clone_index import IncrementalCloneIndex
-
-            clone_index = IncrementalCloneIndex(
-                self.config.clone_index_dir,
-                n_buckets=self.config.clone_index_buckets,
-            )
-        fork_index = None
-        if self.config.fork_index_dir:
-            from ..operators.forks import IncrementalForkIndex
-
-            fork_index = IncrementalForkIndex(
-                self.config.fork_index_dir,
-                n_buckets=self.config.fork_index_buckets,
-            )
-        scd2 = None
-        if self.config.scd2_dir:
-            from ..operators.scd import Scd2View
-
-            scd2 = Scd2View(self.config.scd2_dir,
-                            n_buckets=self.config.scd2_buckets)
-        text_index = None
-        if self.config.text_index_dir:
-            from ..operators.text_index import IncrementalTextIndex
-
-            text_index = IncrementalTextIndex(
-                self.config.text_index_dir,
-                n_buckets=self.config.text_index_buckets,
-            )
-        lm_view = None
-        if self.config.lm_counts_dir:
-            from ..operators.lm import IncrementalLmCounts
-
-            lm_view = IncrementalLmCounts(
-                self.config.lm_counts_dir,
-                text_col=self.config.lm_counts_text_col,
-                n_buckets=self.config.lm_counts_buckets,
-            )
 
         def _apply(df: DataFrame, eid: int) -> None:
             self.apply_batch(df, eid, writer_id=writer_id)
-            if index is not None:
-                # AFTER the table commit, in the same epoch loop: the index
-                # advances from ITS OWN last-applied source version to the
-                # table's new head (writer-fenced, resume-safe — a replayed
-                # epoch no-ops at the table and the index still catches up)
-                index.update(df.sparkSession, self.store)
-            if clusters is not None:
-                # then the labels, fenced on their own source watermark —
-                # the index advance inside is a noop (just ran above)
-                clusters.update(df.sparkSession, self.store)
-            if agg_view is not None:
-                # same contract: O(changed rows) catch-up to the new head
-                agg_view.update(df.sparkSession, self.store)
-            if decontam is not None:
-                # same fenced O(changed-docs) contract as the dedup index
-                decontam.update(df.sparkSession, self.store)
-            if clone_index is not None:
-                # winnowing fingerprints are per-file local state — same
-                # replace/retract contract as the band index
-                clone_index.update(df.sparkSession, self.store)
-            if fork_index is not None:
-                # one digest per file; replace on upsert, retract on delete
-                fork_index.update(df.sparkSession, self.store)
-            if scd2 is not None:
-                # per-version exact catch-up: a multi-version gap (crash
-                # between table commit and timeline advance) preserves
-                # every intermediate image, not a collapsed net diff
-                scd2.update(df.sparkSession, self.store)
-            if text_index is not None:
-                # postings delta + doclen sidecar, fenced like the rest;
-                # sidecar commits first, postings hold the cursor
-                text_index.update(df.sparkSession, self.store)
-            if join_view is not None:
-                # two-source cursor: catches up BOTH the table's new head
-                # and whatever the dim replicated since the last epoch
-                join_view.update(df.sparkSession, self.store, join_dim)
-            if hll_sketch is not None:
-                # monotone register max — a replayed range is harmless AND
-                # fenced; kill/resume covers table + sketch together
-                hll_sketch.update(df.sparkSession, self.store)
-            if cms_sketch is not None:
-                # signed counter adds, writer-fenced: a replayed range is
-                # a noop, so retraction never double-subtracts
-                cms_sketch.update(df.sparkSession, self.store)
-            if hdr_sketch is not None:
-                # same linear-sketch contract as the count-min twin
-                hdr_sketch.update(df.sparkSession, self.store)
-            if lm_view is not None:
-                # linear gram counts, writer-fenced: the LM retrains
-                # itself O(changed docs) inside the epoch loop
-                lm_view.update(df.sparkSession, self.store)
+            for update in derived:
+                update(df.sparkSession, self.store)
             cfg = self.config  # hot-reload may swap the object per epoch
             if (
                 cfg.retention_ms is not None
@@ -1893,20 +1568,20 @@ class CdcApplyEngine:
         return writer.start()
 
 
+_SIZE_SUFFIX = {"": 1, "k": 1 << 10, "m": 1 << 20, "g": 1 << 30, "t": 1 << 40}
+
+
 def _parse_size_bytes(s: str | int | None) -> int | None:
-    """Parse a Spark-style size string ("256m", "10485760", "1g") to bytes."""
-    if s is None:
-        return None
-    if isinstance(s, int):
+    """Parse a Spark-style size string ("256m", "512MB", "1gb", "10485760",
+    "-1") to bytes. An unparseable string raises ValueError — silently
+    falling back would size the compaction budget differently from the
+    broadcast threshold Spark itself accepted."""
+    if s is None or isinstance(s, int):
         return s
-    s = s.strip().lower()
-    mult = {"k": 1 << 10, "m": 1 << 20, "g": 1 << 30, "t": 1 << 40}
-    suffix = s[-1] if s and s[-1] in mult else ""
-    try:
-        n = float(s[: -1] if suffix else s)
-    except ValueError:
-        return None
-    return int(n * (mult[suffix] if suffix else 1))
+    m = re.fullmatch(r"(-?\d+(?:\.\d+)?)([kmgt]?)b?", s.strip().lower())
+    if m is None:
+        raise ValueError(f"unparseable size {s!r} (expected e.g. '256m', '1gb')")
+    return int(float(m.group(1)) * _SIZE_SUFFIX[m.group(2)])
 
 
 def _malformed_envelope_pred() -> F.Column:

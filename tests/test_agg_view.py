@@ -260,11 +260,11 @@ def test_rebucket_rescales_view_and_sidecar_together(spark, tmp_path):
 
 def test_streaming_integrated_view_kill_and_resume(spark, tmp_path):
     """The view advances INSIDE the streaming epoch loop
-    (EngineConfig.agg_view_dir), same resume contract as the dedup index:
-    worst crash window is table committed / process dies before the view
-    advance — on resume the re-delivered epoch no-ops at the table and
-    the view catches up from its own fenced watermark. Parity with full
-    recompute asserted at every epoch boundary."""
+    (``start_stream(derived=[view.update])``), same resume contract as the
+    dedup index: worst crash window is table committed / process dies
+    before the view advance — on resume the re-delivered epoch no-ops at
+    the table and the view catches up from its own fenced watermark.
+    Parity with full recompute asserted at every epoch boundary."""
     import glob
     import os
     import shutil
@@ -274,16 +274,7 @@ def test_streaming_integrated_view_kill_and_resume(spark, tmp_path):
     src = TableStore(str(tmp_path / "src"), n_buckets=4)
     cp = str(tmp_path / "cp")
     view_dir = str(tmp_path / "view")
-    engine = CdcApplyEngine(
-        src,
-        EngineConfig(
-            metrics=False,
-            agg_view_dir=view_dir,
-            agg_view_group_cols=("lang",),
-            agg_view_measures=tuple(MEASURES),
-            agg_view_buckets=4,
-        ),
-    )
+    engine = CdcApplyEngine(src, EngineConfig(metrics=False))
     view = IncrementalAggView(view_dir, ["lang"], MEASURES, n_buckets=4)
 
     def put(name, rows):
@@ -299,7 +290,8 @@ def test_streaming_integrated_view_kill_and_resume(spark, tmp_path):
         _env(4, "c", "bonjour", "fr", 2),
     ])
     q = engine.start_stream(spark, str(cl), cp, CHANGELOG_SCHEMA,
-                            max_files_per_trigger=1)
+                            max_files_per_trigger=1,
+                            derived=[view.update])
     q.awaitTermination()
     assert view.update(spark, src)["status"] == "noop"  # stream kept it current
     _assert_parity(spark, src, view)
@@ -317,7 +309,8 @@ def test_streaming_integrated_view_kill_and_resume(spark, tmp_path):
 
     # resume: table no-ops (fenced), view catches up in the same loop
     q = engine.start_stream(spark, str(cl), cp, CHANGELOG_SCHEMA,
-                            max_files_per_trigger=1)
+                            max_files_per_trigger=1,
+                            derived=[view.update])
     q.awaitTermination()
     _assert_parity(spark, src, view)
     got = {r["lang"]: r for r in view.read(spark).collect()}

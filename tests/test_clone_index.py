@@ -151,8 +151,8 @@ def test_clone_index_update_to_short_text_replaces_stale_fps(spark, tmp_path):
 
 
 def test_streaming_integrated_clone_index_kill_and_resume(spark, tmp_path):
-    """clone_index_dir advances the fingerprint index inside the epoch
-    loop; the worst crash window (table committed, index stale) heals on
+    """``start_stream(derived=[index.update])`` advances the fingerprint
+    index inside the epoch loop; the worst crash window (table committed, index stale) heals on
     resume via writer fencing + the index's own watermark."""
     import glob
     import shutil
@@ -162,10 +162,7 @@ def test_streaming_integrated_clone_index_kill_and_resume(spark, tmp_path):
     src = TableStore(str(tmp_path / "src"), n_buckets=4)
     cp = str(tmp_path / "cp")
     idx_dir = str(tmp_path / "idx")
-    engine = CdcApplyEngine(
-        src, EngineConfig(metrics=False, clone_index_dir=idx_dir,
-                          clone_index_buckets=4)
-    )
+    engine = CdcApplyEngine(src, EngineConfig(metrics=False))
     index = IncrementalCloneIndex(idx_dir, n_buckets=4, k=K, w=W)
 
     def put(name, rows):
@@ -177,7 +174,8 @@ def test_streaming_integrated_clone_index_kill_and_resume(spark, tmp_path):
 
     put("f0", [_env(d, "c", BASE[d], lsn=d) for d in (0, 1, 2, 3)])
     q = engine.start_stream(spark, str(cl), cp, CHANGELOG_SCHEMA,
-                            max_files_per_trigger=1)
+                            max_files_per_trigger=1,
+                            derived=[index.update])
     q.awaitTermination()
     assert index.update(spark, src)["status"] == "noop"  # stream kept it current
     _assert_parity(spark, src, index)
@@ -193,7 +191,8 @@ def test_streaming_integrated_clone_index_kill_and_resume(spark, tmp_path):
 
     # resume: re-delivered epoch no-ops at the table, index catches up
     q = engine.start_stream(spark, str(cl), cp, CHANGELOG_SCHEMA,
-                            max_files_per_trigger=1)
+                            max_files_per_trigger=1,
+                            derived=[index.update])
     q.awaitTermination()
     _assert_parity(spark, src, index)
     assert any(

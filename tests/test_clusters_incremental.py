@@ -268,7 +268,7 @@ def test_cluster_index_registers_as_retention_consumer(spark, tmp_path):
 
 def test_streaming_integrated_clusters_kill_and_resume(spark, tmp_path):
     """Round-4: the cluster labels advance INSIDE the streaming epoch loop
-    (EngineConfig.cluster_index_dir on top of dedup_index_dir) and
+    (``derived=[index.update, clusters.update]``) and
     kill/resume covers all three artifacts — including the worst crash
     window: table AND index committed, process dies BEFORE the cluster
     advance. On resume the re-delivered epoch no-ops at the table and the
@@ -283,11 +283,7 @@ def test_streaming_integrated_clusters_kill_and_resume(spark, tmp_path):
     src = TableStore(str(tmp_path / "src"), n_buckets=4)
     cp = str(tmp_path / "cp")
     idx_dir, cc_dir = str(tmp_path / "idx"), str(tmp_path / "cc")
-    engine = CdcApplyEngine(
-        src, EngineConfig(metrics=False,
-                          dedup_index_dir=idx_dir, dedup_index_buckets=4,
-                          cluster_index_dir=cc_dir, cluster_index_buckets=4)
-    )
+    engine = CdcApplyEngine(src, EngineConfig(metrics=False))
     index = IncrementalDedupIndex(idx_dir, n_buckets=4)
     clusters = IncrementalClusterIndex(cc_dir, index, n_buckets=4)
 
@@ -302,7 +298,8 @@ def test_streaming_integrated_clusters_kill_and_resume(spark, tmp_path):
     put("f0", [_env(0, "c", A, 0), _env(1, "c", A, 1),
                _env(10, "c", C, 2), _env(11, "c", C, 3)])
     q = engine.start_stream(spark, str(cl), cp, CHANGELOG_SCHEMA,
-                            max_files_per_trigger=1)
+                            max_files_per_trigger=1,
+                            derived=[index.update, clusters.update])
     q.awaitTermination()
     assert clusters.update(spark, src)["status"] == "noop"  # stream current
     _assert_parity(spark, src, clusters)
@@ -322,7 +319,8 @@ def test_streaming_integrated_clusters_kill_and_resume(spark, tmp_path):
 
     # ---- resume: table + index no-op (fenced), labels catch up ----
     q = engine.start_stream(spark, str(cl), cp, CHANGELOG_SCHEMA,
-                            max_files_per_trigger=1)
+                            max_files_per_trigger=1,
+                            derived=[index.update, clusters.update])
     q.awaitTermination()
     _assert_parity(spark, src, clusters)
     assert _clusters_by_path(spark, clusters) == {
@@ -332,7 +330,8 @@ def test_streaming_integrated_clusters_kill_and_resume(spark, tmp_path):
     # ---- epoch 2 via the stream: bridge delete SPLITS mid-stream ----
     put("f2", [_env(5, "d", B, 200)])
     q = engine.start_stream(spark, str(cl), cp, CHANGELOG_SCHEMA,
-                            max_files_per_trigger=1)
+                            max_files_per_trigger=1,
+                            derived=[index.update, clusters.update])
     q.awaitTermination()
     _assert_parity(spark, src, clusters)
     assert _clusters_by_path(spark, clusters) == {

@@ -204,7 +204,7 @@ def test_estimate_plan_broadcasts_sketch(spark, users):
 
 def test_streaming_integrated_cms_kill_and_resume(spark, tmp_path):
     """The CMS sketch advances INSIDE the streaming epoch loop
-    (EngineConfig.cms_sketch_dir), same resume contract as the other
+    (``start_stream(derived=[sk.update])``), same resume contract as the other
     incremental indexes — worst crash window is table committed / process
     dies before the sketch advance; on resume the re-delivered epoch
     no-ops at the table (fenced) and the sketch catches up from its own
@@ -238,16 +238,7 @@ def test_streaming_integrated_cms_kill_and_resume(spark, tmp_path):
     src = TableStore(str(tmp_path / "src"), n_buckets=4)
     cp = str(tmp_path / "cp")
     sk_dir = str(tmp_path / "sketch")
-    engine = CdcApplyEngine(
-        src,
-        EngineConfig(
-            metrics=False,
-            cms_sketch_dir=sk_dir,
-            cms_sketch_group_cols=("lang",),
-            cms_sketch_value_expr="content",
-            cms_sketch_buckets=4,
-        ),
-    )
+    engine = CdcApplyEngine(src, EngineConfig(metrics=False))
     sk = IncrementalCmsSketch(sk_dir, ["lang"], "content", n_buckets=4)
 
     def put(name, rows):
@@ -263,7 +254,8 @@ def test_streaming_integrated_cms_kill_and_resume(spark, tmp_path):
         _env(4, "c", "bonjour", "fr", 2),
     ])
     q = engine.start_stream(spark, str(cl), cp, CHANGELOG_SCHEMA,
-                            max_files_per_trigger=1)
+                            max_files_per_trigger=1,
+                            derived=[sk.update])
     q.awaitTermination()
     assert sk.update(spark, src)["status"] == "noop"  # stream kept it current
 
@@ -280,7 +272,8 @@ def test_streaming_integrated_cms_kill_and_resume(spark, tmp_path):
 
     # resume: table no-ops (fenced), sketch catches up in the same loop
     q = engine.start_stream(spark, str(cl), cp, CHANGELOG_SCHEMA,
-                            max_files_per_trigger=1)
+                            max_files_per_trigger=1,
+                            derived=[sk.update])
     q.awaitTermination()
     assert _reg_map(sk.read(spark)) == _reg_map(
         cms_registers(src.read_state(spark), ["lang"], "content")

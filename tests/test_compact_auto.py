@@ -1,13 +1,16 @@
-"""Adaptive compaction strategy (compact_strategy="auto", the default):
-the engine materializes the slim phase-1 winner stubs, probes their real
-count/key-bytes, and only broadcasts the join-back when the estimate fits
-the broadcast budget — a giant-key-count batch degrades to a shuffle join
-instead of OOMing the driver, with identical results."""
+"""Adaptive compaction: the engine materializes the slim phase-1 winner
+stubs, probes their real count/key-bytes, and only broadcasts the join-back
+when the estimate fits the broadcast budget — a giant-key-count batch
+degrades to a shuffle join instead of OOMing the driver, with identical
+results."""
 
 from __future__ import annotations
 
+import pytest
 from pyspark.sql import Row
 
+from kp_data_replication_spark.functions.envelope import unpack_envelope
+from kp_data_replication_spark.operators.compact import last_write_wins
 from kp_data_replication_spark.schema import CHANGELOG_SCHEMA
 from kp_data_replication_spark.sources.table_store import TableStore
 from kp_data_replication_spark.streaming.apply import (
@@ -52,7 +55,17 @@ def test_parse_size_bytes():
     assert _parse_size_bytes("1048576") == 1 << 20
     assert _parse_size_bytes(123) == 123
     assert _parse_size_bytes(None) is None
-    assert _parse_size_bytes("bogus") is None
+    # Spark's own spellings for autoBroadcastJoinThreshold
+    assert _parse_size_bytes("1gb") == 1 << 30
+    assert _parse_size_bytes("256mb") == 256 << 20
+    assert _parse_size_bytes("512MB") == 512 << 20
+    assert _parse_size_bytes("64KB") == 64 << 10
+    assert _parse_size_bytes("2tb") == 2 << 40
+    assert _parse_size_bytes("-1") == -1  # Spark's "broadcast disabled"
+    with pytest.raises(ValueError):
+        _parse_size_bytes("bogus")
+    with pytest.raises(ValueError):
+        _parse_size_bytes("256mib")
 
 
 def test_auto_small_batch_broadcasts(spark, tmp_path):
@@ -80,17 +93,15 @@ def test_auto_huge_key_count_degrades_to_shuffle_without_config(spark, tmp_path)
     assert out["keys_changed"] == 3000
 
     # parity: the degraded plan produces exactly the direct aggregate's state
-    store2 = TableStore(str(tmp_path / "t2"), n_buckets=4)
-    engine2 = CdcApplyEngine(
-        store2, EngineConfig(metrics=False, compact_strategy="direct")
-    )
-    engine2.apply_batch(_events(spark, 3000), 0)
     a = {
         (r["repo"], r["path"]): r["content"]
         for r in store.read_state(spark).collect()
     }
+    direct = last_write_wins(
+        unpack_envelope(_events(spark, 3000), normalize=False)
+    )
     b = {
         (r["repo"], r["path"]): r["content"]
-        for r in store2.read_state(spark).collect()
+        for r in direct.collect()
     }
     assert a == b and len(a) == 3000

@@ -144,8 +144,8 @@ def test_probe_reads_index_not_corpus_text(spark, tmp_path):
 
 def test_streaming_integrated_index_kill_and_resume(spark, tmp_path):
     """The fingerprint index advances INSIDE the streaming epoch loop
-    (EngineConfig.decontam_index_dir); the table-committed-but-index-lagging
-    crash window heals on resume via the fenced catch-up."""
+    (``start_stream(derived=[index.update])``); the table-committed-but-
+    index-lagging crash window heals on resume via the fenced catch-up."""
     import glob
     import os
     import shutil
@@ -155,9 +155,7 @@ def test_streaming_integrated_index_kill_and_resume(spark, tmp_path):
     src = TableStore(str(tmp_path / "src"), n_buckets=4)
     cp = str(tmp_path / "cp")
     idx_dir = str(tmp_path / "idx")
-    engine = CdcApplyEngine(
-        src, EngineConfig(metrics=False, decontam_index_dir=idx_dir,
-                          decontam_index_buckets=4))
+    engine = CdcApplyEngine(src, EngineConfig(metrics=False))
     index = IncrementalDecontamIndex(idx_dir, n_buckets=4)
 
     def put(name, rows):
@@ -169,7 +167,8 @@ def test_streaming_integrated_index_kill_and_resume(spark, tmp_path):
 
     put("f0", [_env(i, "c", t, i) for i, t in CORPUS.items()])
     q = engine.start_stream(spark, str(cl), cp, CHANGELOG_SCHEMA,
-                            max_files_per_trigger=1)
+                            max_files_per_trigger=1,
+                            derived=[index.update])
     q.awaitTermination()
     assert index.update(spark, src)["status"] == "noop"  # stream kept it current
     _assert_parity(spark, src, index)
@@ -185,7 +184,8 @@ def test_streaming_integrated_index_kill_and_resume(spark, tmp_path):
         f"decontam-index:{os.path.abspath(src.root)}") < src.current_version()
 
     q = engine.start_stream(spark, str(cl), cp, CHANGELOG_SCHEMA,
-                            max_files_per_trigger=1)
+                            max_files_per_trigger=1,
+                            derived=[index.update])
     q.awaitTermination()
     _assert_parity(spark, src, index)
     got = {int(r["path"])

@@ -194,7 +194,7 @@ def test_index_registers_as_retention_consumer(spark, tmp_path):
 
 def test_streaming_integrated_index_kill_and_resume(spark, tmp_path):
     """Round-4: the index advances INSIDE the streaming epoch loop
-    (EngineConfig.dedup_index_dir) and kill/resume covers both halves —
+    (``start_stream(derived=[index.update])``) and kill/resume covers both halves —
     including the worst crash window: table committed, process dies BEFORE
     the index advance. On resume the re-delivered epoch no-ops at the
     table (writer fencing) and the index catches up from its own
@@ -207,10 +207,7 @@ def test_streaming_integrated_index_kill_and_resume(spark, tmp_path):
     src = TableStore(str(tmp_path / "src"), n_buckets=4)
     cp = str(tmp_path / "cp")
     idx_dir = str(tmp_path / "idx")
-    engine = CdcApplyEngine(
-        src, EngineConfig(metrics=False, dedup_index_dir=idx_dir,
-                          dedup_index_buckets=4)
-    )
+    engine = CdcApplyEngine(src, EngineConfig(metrics=False))
     index = IncrementalDedupIndex(idx_dir, n_buckets=4)
 
     def put(name, rows):
@@ -228,7 +225,8 @@ def test_streaming_integrated_index_kill_and_resume(spark, tmp_path):
     # ---- epoch 0 via the stream: initial inserts (planted pair 0/1) ----
     put("f0", [_env(d, "c", BASE[d], lsn=d) for d in (0, 1, 2, 3)])
     q = engine.start_stream(spark, str(cl), cp, CHANGELOG_SCHEMA,
-                            max_files_per_trigger=1)
+                            max_files_per_trigger=1,
+                            derived=[index.update])
     q.awaitTermination()
     assert index.update(spark, src)["status"] == "noop"  # stream kept it current
     _assert_parity(spark, src, index)
@@ -248,7 +246,8 @@ def test_streaming_integrated_index_kill_and_resume(spark, tmp_path):
     # ---- resume: the stream re-delivers epoch 1 -> table no-ops (fenced),
     # index catches up in the same foreachBatch ----
     q = engine.start_stream(spark, str(cl), cp, CHANGELOG_SCHEMA,
-                            max_files_per_trigger=1)
+                            max_files_per_trigger=1,
+                            derived=[index.update])
     q.awaitTermination()
     _assert_parity(spark, src, index)
     pairs = _pairs_set(index.all_pairs(spark).collect(), incremental=True)
@@ -258,7 +257,8 @@ def test_streaming_integrated_index_kill_and_resume(spark, tmp_path):
     put("f2", [_env(10, "d", BASE[10], lsn=200),
                _env(1, "u", "entirely new text now", lsn=201)])
     q = engine.start_stream(spark, str(cl), cp, CHANGELOG_SCHEMA,
-                            max_files_per_trigger=1)
+                            max_files_per_trigger=1,
+                            derived=[index.update])
     q.awaitTermination()
     _assert_parity(spark, src, index)
     final = _pairs_set(index.all_pairs(spark).collect(), incremental=True)

@@ -294,10 +294,7 @@ def test_forget_between_stream_runs_keeps_table_and_index_consistent(
     src = TableStore(str(tmp_path / "src"), n_buckets=4)
     cp = str(tmp_path / "cp")
     idx_dir = str(tmp_path / "idx")
-    engine = CdcApplyEngine(
-        src, EngineConfig(metrics=False, dedup_index_dir=idx_dir,
-                          dedup_index_buckets=4)
-    )
+    engine = CdcApplyEngine(src, EngineConfig(metrics=False))
     index = IncrementalDedupIndex(idx_dir, n_buckets=4)
 
     def put(name, rows):
@@ -311,7 +308,8 @@ def test_forget_between_stream_runs_keeps_table_and_index_consistent(
     put("f1", [_env(10, "c", BASE[10], lsn=100),
                _env(11, "c", BASE[11], lsn=101)])
     q = engine.start_stream(spark, str(cl), cp, CHANGELOG_SCHEMA,
-                            max_files_per_trigger=1)
+                            max_files_per_trigger=1,
+                            derived=[index.update])
     q.awaitTermination()
     parity(src, index)
 
@@ -327,7 +325,8 @@ def test_forget_between_stream_runs_keeps_table_and_index_consistent(
     # them and the index crosses the forget version via the markers
     put("f2", [_env(2, "u", BASE[10] + " drifted toward ten", lsn=200)])
     q = engine.start_stream(spark, str(cl), cp, CHANGELOG_SCHEMA,
-                            max_files_per_trigger=1)
+                            max_files_per_trigger=1,
+                            derived=[index.update])
     q.awaitTermination()
     pairs = parity(src, index)
     live = {r["path"] for r in src.read_state(spark).collect()}

@@ -118,8 +118,8 @@ def test_incremental_histogram_tracks_live_state_exactly(spark, tmp_path):
 
 
 def test_streaming_integrated_hdr_kill_and_resume(spark, tmp_path):
-    """EngineConfig.hdr_sketch_dir advances the histogram in the epoch
-    loop; worst crash window (table committed, process dies before the
+    """``start_stream(derived=[sk.update])`` advances the histogram in the
+    epoch loop; worst crash window (table committed, process dies before the
     sketch advance) heals on resume without double-subtracting."""
     import glob
     import os
@@ -148,16 +148,7 @@ def test_streaming_integrated_hdr_kill_and_resume(spark, tmp_path):
     cp = str(tmp_path / "cp")
     sk_dir = str(tmp_path / "sk")
     vexpr = "length(content)"
-    engine = CdcApplyEngine(
-        src,
-        EngineConfig(
-            metrics=False,
-            hdr_sketch_dir=sk_dir,
-            hdr_sketch_group_cols=("lang",),
-            hdr_sketch_value_expr=vexpr,
-            hdr_sketch_buckets=4,
-        ),
-    )
+    engine = CdcApplyEngine(src, EngineConfig(metrics=False))
     sk = IncrementalHdrHistogram(sk_dir, ["lang"], vexpr, n_buckets=4)
 
     def put(name, rows):
@@ -171,7 +162,8 @@ def test_streaming_integrated_hdr_kill_and_resume(spark, tmp_path):
                _env(1, "c", "medium words here", "en", 1),
                _env(4, "c", "bonjour", "fr", 2)])
     q = engine.start_stream(spark, str(cl), cp, CHANGELOG_SCHEMA,
-                            max_files_per_trigger=1)
+                            max_files_per_trigger=1,
+                            derived=[sk.update])
     q.awaitTermination()
     assert sk.update(spark, src)["status"] == "noop"
 
@@ -185,7 +177,8 @@ def test_streaming_integrated_hdr_kill_and_resume(spark, tmp_path):
         f"hdr-sketch:{os.path.abspath(src.root)}") < src.current_version()
 
     q = engine.start_stream(spark, str(cl), cp, CHANGELOG_SCHEMA,
-                            max_files_per_trigger=1)
+                            max_files_per_trigger=1,
+                            derived=[sk.update])
     q.awaitTermination()
     assert _bin_map(sk.read(spark)) == _bin_map(
         hdr_bins(src.read_state(spark), ["lang"], vexpr)

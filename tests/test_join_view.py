@@ -281,11 +281,11 @@ def test_retention_pin_protects_cursor_version(spark, tmp_path):
 
 
 def test_streaming_integrated_join_view_kill_and_resume(spark, tmp_path):
-    """EngineConfig.join_view_dir: the view advances inside the FACT
-    engine's epoch loop while the dimension replicates independently.
-    Worst crash window — fact table committed, process dies before the
-    view advance — heals on resume (the re-delivered epoch no-ops at the
-    table, the two-source cursor catches up both sides)."""
+    """``derived=[lambda s, t: jv.update(s, t, dim)]``: the view advances
+    inside the FACT engine's epoch loop while the dimension replicates
+    independently. Worst crash window — fact table committed, process dies
+    before the view advance — heals on resume (the re-delivered epoch
+    no-ops at the table, the two-source cursor catches up both sides)."""
     import glob
     import os
     import shutil
@@ -299,18 +299,7 @@ def test_streaming_integrated_join_view_kill_and_resume(spark, tmp_path):
     de = CdcApplyEngine(dim, EngineConfig(metrics=False))
     cp = str(tmp_path / "cp")
     jv_dir = str(tmp_path / "jv")
-    engine = CdcApplyEngine(
-        fact,
-        EngineConfig(
-            metrics=False,
-            join_view_dir=jv_dir,
-            join_view_dim_root=dim.root,
-            join_view_fk_exprs=(("repo", "'t'"), ("path", "lang")),
-            join_view_fact_cols=(("f_content", "content"),),
-            join_view_dim_cols=(("d_content", "content"),),
-            join_view_buckets=4,
-        ),
-    )
+    engine = CdcApplyEngine(fact, EngineConfig(metrics=False))
     jv = IncrementalJoinView(
         jv_dir,
         fk_exprs={"repo": "'t'", "path": "lang"},
@@ -329,7 +318,8 @@ def test_streaming_integrated_join_view_kill_and_resume(spark, tmp_path):
     de.apply_batch(_batch(spark, [_env("d1", "c", "D1", None, 1)]), 0)
     put("f0", [_env("f1", "c", "F1", "d1", 0), _env("f2", "c", "F2", "d2", 1)])
     q = engine.start_stream(spark, str(cl), cp, CHANGELOG_SCHEMA,
-                            max_files_per_trigger=1)
+                            max_files_per_trigger=1,
+                            derived=[lambda s, t: jv.update(s, t, dim)])
     q.awaitTermination()
     assert jv.update(spark, fact, dim)["status"] == "noop"  # stream current
     assert _got(spark, jv) == _expected(spark, fact, dim)
@@ -347,7 +337,8 @@ def test_streaming_integrated_join_view_kill_and_resume(spark, tmp_path):
 
     # resume: fact epoch no-ops (fenced), view catches up both sources
     q = engine.start_stream(spark, str(cl), cp, CHANGELOG_SCHEMA,
-                            max_files_per_trigger=1)
+                            max_files_per_trigger=1,
+                            derived=[lambda s, t: jv.update(s, t, dim)])
     q.awaitTermination()
     assert _got(spark, jv) == _expected(spark, fact, dim)
     assert jv.update(spark, fact, dim)["status"] == "noop"

@@ -185,9 +185,9 @@ def test_incremental_equals_recompute_every_epoch(spark, tmp_path):
 
 def test_streaming_integrated_lm_kill_and_resume(spark, tmp_path):
     """The LM count table advances INSIDE the streaming epoch loop
-    (EngineConfig.lm_counts_dir), same resume contract as the sibling
-    incremental views — worst crash window is table committed / process
-    dies before the model advance; on resume the re-delivered epoch
+    (``start_stream(derived=[view.update])``), same resume contract as the
+    sibling incremental views — worst crash window is table committed /
+    process dies before the model advance; on resume the re-delivered epoch
     no-ops at the table (fenced) and the model catches up from its own
     fenced watermark WITHOUT double-subtracting, ending equal to a batch
     retrain over the live corpus."""
@@ -214,11 +214,7 @@ def test_streaming_integrated_lm_kill_and_resume(spark, tmp_path):
     src = TableStore(str(tmp_path / "ssrc"), n_buckets=4)
     cp = str(tmp_path / "scp")
     lm_dir = str(tmp_path / "slm")
-    engine = CdcApplyEngine(
-        src,
-        EngineConfig(metrics=False, lm_counts_dir=lm_dir,
-                     lm_counts_text_col="content", lm_counts_buckets=4),
-    )
+    engine = CdcApplyEngine(src, EngineConfig(metrics=False))
     view = IncrementalLmCounts(lm_dir, text_col="content", n_buckets=4)
 
     def put(name, rows):
@@ -231,7 +227,8 @@ def test_streaming_integrated_lm_kill_and_resume(spark, tmp_path):
     put("f0", [_env(0, "c", "alpha beta gamma", 0),
                _env(1, "c", "beta gamma delta", 1)])
     q = engine.start_stream(spark, str(cl), cp, CHANGELOG_SCHEMA,
-                            max_files_per_trigger=1)
+                            max_files_per_trigger=1,
+                            derived=[view.update])
     q.awaitTermination()
     assert view.update(spark, src)["status"] == "noop"  # stream kept it fresh
 
@@ -248,7 +245,8 @@ def test_streaming_integrated_lm_kill_and_resume(spark, tmp_path):
 
     # resume: table no-ops (fenced), model catches up in the same loop
     q = engine.start_stream(spark, str(cl), cp, CHANGELOG_SCHEMA,
-                            max_files_per_trigger=1)
+                            max_files_per_trigger=1,
+                            derived=[view.update])
     q.awaitTermination()
     live = src.read_state(spark).select(
         F.col("path").alias("doc_id"), F.col("content").alias("text")

@@ -74,18 +74,22 @@ def test_compact_then_merge_adds_no_extra_exchange(spark, changelog_dir):
     assert n <= 2, f"unexpected extra exchanges ({n}):\n{plan_string(merged, 'simple')}"
 
 
-def test_twophase_compact_broadcasts_winners_never_shuffles_rows_wide(
+def test_compaction_broadcast_join_back_never_shuffles_rows_wide(
     spark, changelog_dir
 ):
-    """The two-phase compaction's join-back must BROADCAST the slim winner
+    """The compaction's in-budget join-back must BROADCAST the slim winner
     aggregate — the raw (wide) rows side must reach the join without any
     exchange of its own, so content bytes are never shuffled for winner
     selection (they shuffle once, post-join, in the key-dedup aggregate)."""
-    from kp_data_replication_spark.operators.compact import last_write_wins_join
+    from kp_data_replication_spark.operators.compact import (
+        lww_join_winners,
+        lww_winners,
+    )
 
     df = spark.read.parquet(changelog_dir)
     rows = unpack_envelope(select_topics(df, "^repos$"), normalize=False)
-    comp = last_write_wins_join(rows, count_col="_n")
+    winners = lww_winners(rows, count_col="_n")
+    comp = lww_join_winners(rows, winners, broadcast=True)
     plan = plan_string(comp)
     assert "BroadcastExchange" in plan, plan
     # exactly 2 shuffles end-to-end: the slim winner aggregate + the final
@@ -203,7 +207,7 @@ def test_change_file_read_is_join_free_and_touches_no_table_data(spark, tmp_path
 
 
 def test_compaction_shuffle_fallback_has_no_broadcast(spark, changelog_dir):
-    """compact_strategy='auto' degrade path: the shuffle join-back must not
+    """Over-budget compaction path: the shuffle join-back must not
     plan a broadcast (that is exactly the driver-OOM it avoids); both join
     sides hash-exchange instead."""
     from kp_data_replication_spark.operators.compact import (

@@ -169,10 +169,3 @@ def test_partition_count_mismatch_replay(spark, tmp_path):
     s16 = TableStore(str(tmp_path / "t16"))
     assert s5.n_buckets == 5 and s16.n_buckets == 16
 
-
-def test_arrow_unpack_parity(spark, changelog_dir, tmp_path):
-    """The all-Arrow unpack path produces the identical end state."""
-    store = TableStore(str(tmp_path / "target"), n_buckets=8)
-    engine = CdcApplyEngine(store, EngineConfig(arrow_unpack=True, metrics=False))
-    engine.replay_batch(spark, changelog_dir)
-    assert_state_matches(spark, store, changelog_dir)

@@ -3,7 +3,7 @@ interval shape over a full key lifecycle, as-of parity against the
 source's time travel at EVERY version, multi-version catch-up ==
 per-epoch maintenance (intermediate images preserved), dirty-bucket
 pruning, maintenance-version skips, fencing, pruning, and streaming
-kill/resume through EngineConfig.scd2_dir."""
+kill/resume through start_stream(derived=[view.update])."""
 
 from __future__ import annotations
 
@@ -207,7 +207,7 @@ def test_prune_drops_closed_intervals_keeps_open(spark, tmp_path):
 
 def test_streaming_integrated_kill_and_resume(spark, tmp_path):
     """The timeline advances INSIDE the streaming epoch loop
-    (EngineConfig.scd2_dir). Worst crash window — table committed, process
+    (``start_stream(derived=[view.update])``). Worst crash window — table committed, process
     dies before the timeline advance — heals on resume via the fenced
     per-version catch-up, preserving the missed version as its own
     interval."""
@@ -216,8 +216,7 @@ def test_streaming_integrated_kill_and_resume(spark, tmp_path):
     src = TableStore(str(tmp_path / "src"), n_buckets=4)
     cp = str(tmp_path / "cp")
     scd_dir = str(tmp_path / "scd2")
-    engine = CdcApplyEngine(
-        src, EngineConfig(metrics=False, scd2_dir=scd_dir, scd2_buckets=4))
+    engine = CdcApplyEngine(src, EngineConfig(metrics=False))
     view = Scd2View(scd_dir, n_buckets=4)
 
     def put(name, rows):
@@ -229,7 +228,8 @@ def test_streaming_integrated_kill_and_resume(spark, tmp_path):
 
     put("f0", BATCHES[0])
     q = engine.start_stream(spark, str(cl), cp, CHANGELOG_SCHEMA,
-                            max_files_per_trigger=1)
+                            max_files_per_trigger=1,
+                            derived=[view.update])
     q.awaitTermination()
     assert view.update(spark, src)["status"] == "noop"  # stream kept it current
 
@@ -245,7 +245,8 @@ def test_streaming_integrated_kill_and_resume(spark, tmp_path):
 
     put("f2", BATCHES[2])
     q = engine.start_stream(spark, str(cl), cp, CHANGELOG_SCHEMA,
-                            max_files_per_trigger=1)
+                            max_files_per_trigger=1,
+                            derived=[view.update])
     q.awaitTermination()
 
     tl = _timeline(spark, view)

@@ -175,7 +175,7 @@ def test_incremental_sketch_epoch_cost_is_o_batch(spark, tmp_path):
 
 def test_streaming_integrated_sketch_kill_and_resume(spark, tmp_path):
     """The sketch advances INSIDE the streaming epoch loop
-    (EngineConfig.hll_sketch_dir), same resume contract as the other
+    (``start_stream(derived=[sk.update])``), same resume contract as the other
     incremental indexes: worst crash window is table committed / process
     dies before the sketch advance — on resume the re-delivered epoch
     no-ops at the table (fenced) and the sketch catches up from its own
@@ -205,16 +205,7 @@ def test_streaming_integrated_sketch_kill_and_resume(spark, tmp_path):
     src = TableStore(str(tmp_path / "src"), n_buckets=4)
     cp = str(tmp_path / "cp")
     sk_dir = str(tmp_path / "sketch")
-    engine = CdcApplyEngine(
-        src,
-        EngineConfig(
-            metrics=False,
-            hll_sketch_dir=sk_dir,
-            hll_sketch_group_cols=("lang",),
-            hll_sketch_value_expr="content",
-            hll_sketch_buckets=4,
-        ),
-    )
+    engine = CdcApplyEngine(src, EngineConfig(metrics=False))
     sk = IncrementalHllSketch(sk_dir, ["lang"], "content", n_buckets=4)
 
     def put(name, rows):
@@ -230,7 +221,8 @@ def test_streaming_integrated_sketch_kill_and_resume(spark, tmp_path):
         _env(4, "c", "bonjour", "fr", 2),
     ])
     q = engine.start_stream(spark, str(cl), cp, CHANGELOG_SCHEMA,
-                            max_files_per_trigger=1)
+                            max_files_per_trigger=1,
+                            derived=[sk.update])
     q.awaitTermination()
     assert sk.update(spark, src)["status"] == "noop"  # stream kept it current
 
@@ -247,7 +239,8 @@ def test_streaming_integrated_sketch_kill_and_resume(spark, tmp_path):
 
     # resume: table no-ops (fenced), sketch catches up in the same loop
     q = engine.start_stream(spark, str(cl), cp, CHANGELOG_SCHEMA,
-                            max_files_per_trigger=1)
+                            max_files_per_trigger=1,
+                            derived=[sk.update])
     q.awaitTermination()
     observed = spark.createDataFrame(
         [("en", "tiny!"), ("en", "medium words"),

@@ -294,7 +294,7 @@ def test_positions_and_phrase_search(spark, tmp_path):
 
 def test_streaming_integrated_kill_and_resume(spark, tmp_path):
     """The index advances INSIDE the streaming epoch loop
-    (EngineConfig.text_index_dir). Worst crash window — table committed,
+    (``start_stream(derived=[idx.update])``). Worst crash window — table committed,
     process dies before the index advance — heals on resume via the fenced
     catch-up; postings equal full recompute at the end."""
     import glob
@@ -306,9 +306,7 @@ def test_streaming_integrated_kill_and_resume(spark, tmp_path):
     src = TableStore(str(tmp_path / "src"), n_buckets=4)
     cp = str(tmp_path / "cp")
     idx_dir = str(tmp_path / "tidx")
-    engine = CdcApplyEngine(
-        src, EngineConfig(metrics=False, text_index_dir=idx_dir,
-                          text_index_buckets=8))
+    engine = CdcApplyEngine(src, EngineConfig(metrics=False))
     idx = IncrementalTextIndex(idx_dir, n_buckets=8)
 
     def put(name, rows):
@@ -321,7 +319,8 @@ def test_streaming_integrated_kill_and_resume(spark, tmp_path):
     put("f0", [_env(0, "c", "spark merge batch", 0),
                _env(1, "c", "vector scan", 1)])
     q = engine.start_stream(spark, str(cl), cp, CHANGELOG_SCHEMA,
-                            max_files_per_trigger=1)
+                            max_files_per_trigger=1,
+                            derived=[idx.update])
     q.awaitTermination()
     assert idx.update(spark, src)["status"] == "noop"  # stream kept it current
     assert _got_postings(spark, idx) == _expected_postings(spark, src)
@@ -339,7 +338,8 @@ def test_streaming_integrated_kill_and_resume(spark, tmp_path):
 
     put("f2", [_env(2, "c", "merge window group", 200)])
     q = engine.start_stream(spark, str(cl), cp, CHANGELOG_SCHEMA,
-                            max_files_per_trigger=1)
+                            max_files_per_trigger=1,
+                            derived=[idx.update])
     q.awaitTermination()
     assert _got_postings(spark, idx) == _expected_postings(spark, src)
     got = {

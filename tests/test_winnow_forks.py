@@ -234,8 +234,9 @@ def test_fork_index_sweep_never_reads_corpus_text(spark, tmp_path):
 
 
 def test_streaming_integrated_fork_index(spark, tmp_path):
-    """fork_index_dir advances the sha index inside the epoch loop; the
-    table-committed/index-stale crash window heals on resume."""
+    """``start_stream(derived=[index.update])`` advances the sha index
+    inside the epoch loop; the table-committed/index-stale crash window
+    heals on resume."""
     import glob
     import os as _os
     import shutil
@@ -245,10 +246,7 @@ def test_streaming_integrated_fork_index(spark, tmp_path):
     src = TableStore(str(tmp_path / "src"), n_buckets=4)
     cp = str(tmp_path / "cp")
     idx_dir = str(tmp_path / "idx")
-    engine = CdcApplyEngine(
-        src, EngineConfig(metrics=False, fork_index_dir=idx_dir,
-                          fork_index_buckets=4)
-    )
+    engine = CdcApplyEngine(src, EngineConfig(metrics=False))
     index = IncrementalForkIndex(idx_dir, n_buckets=4)
 
     def put(name, rows):
@@ -261,7 +259,8 @@ def test_streaming_integrated_fork_index(spark, tmp_path):
     put("f0", [_fenv("a", f"f{i}", "c", f"text {i}", i) for i in range(4)]
         + [_fenv("b", f"f{i}", "c", f"text {i}", 100 + i) for i in range(3)])
     q = engine.start_stream(spark, str(cl), cp, CHANGELOG_SCHEMA,
-                            max_files_per_trigger=1)
+                            max_files_per_trigger=1,
+                            derived=[index.update])
     q.awaitTermination()
     assert index.update(spark, src)["status"] == "noop"
     _fork_parity(spark, src, index)
@@ -275,6 +274,7 @@ def test_streaming_integrated_fork_index(spark, tmp_path):
         f"fork-index:{_os.path.abspath(src.root)}") < src.current_version()
 
     q = engine.start_stream(spark, str(cl), cp, CHANGELOG_SCHEMA,
-                            max_files_per_trigger=1)
+                            max_files_per_trigger=1,
+                            derived=[index.update])
     q.awaitTermination()
     _fork_parity(spark, src, index)

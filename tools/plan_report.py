@@ -23,7 +23,8 @@ from kp_data_replication_spark.functions.envelope import (  # noqa: E402
 )
 from kp_data_replication_spark.operators.compact import (  # noqa: E402
     last_write_wins,
-    last_write_wins_join,
+    lww_join_winners,
+    lww_winners,
 )
 from kp_data_replication_spark.operators.dedup_cdc import filter_applied  # noqa: E402
 from kp_data_replication_spark.operators.filters import select_topics  # noqa: E402
@@ -65,7 +66,8 @@ def main() -> None:
         formatted(slim),
     ))
 
-    twophase = last_write_wins_join(rows, count_col="_n").withColumn(
+    winners = lww_winners(rows, count_col="_n")
+    twophase = lww_join_winners(rows, winners, broadcast=True).withColumn(
         "content", normalize_content(F.col("content"))
     )
     sections.append((
