@@ -249,11 +249,7 @@ def bench_incremental_dedup(spark, sf_dir: str, work_dir: str) -> dict:
     # table's bytes instead of all of it (at 10^9 docs the operator would
     # run thousands of buckets and the fraction collapses further)
     src = TableStore(os.path.join(work_dir, "dedup_src"), n_buckets=256)
-    # changefeed_files: persist per-version change sets (Delta CDF
-    # analogue) so the index's epoch read is O(batch), no state diff
-    engine = CdcApplyEngine(
-        src, EngineConfig(metrics=False, changefeed_files=True)
-    )
+    engine = CdcApplyEngine(src, EngineConfig(metrics=False))
     # the index rows are SLIM (key + 4 band hashes): fewer buckets = fewer
     # tiny files/tasks per merge at this scale; at 10^9 docs the index is
     # ~150 GB and wants thousands of buckets again
@@ -378,9 +374,7 @@ def bench_incremental_clone(spark, sf_dir: str, work_dir: str) -> dict:
         )
 
     src = TableStore(os.path.join(work_dir, "clone_src"), n_buckets=64)
-    engine = CdcApplyEngine(
-        src, EngineConfig(metrics=False, changefeed_files=True)
-    )
+    engine = CdcApplyEngine(src, EngineConfig(metrics=False))
     index = IncrementalCloneIndex(
         os.path.join(work_dir, "clone_idx"), n_buckets=16
     )
@@ -478,9 +472,7 @@ def bench_incremental_ann(spark, sf_dir: str, work_dir: str) -> dict:
         )
 
     src = TableStore(os.path.join(work_dir, "ann_src"), n_buckets=64)
-    engine = CdcApplyEngine(
-        src, EngineConfig(metrics=False, changefeed_files=True)
-    )
+    engine = CdcApplyEngine(src, EngineConfig(metrics=False))
     index = IncrementalAnnIndex(os.path.join(work_dir, "ann_idx"), n_buckets=16)
     cents = base.orderBy("vec_id").limit(64).select(
         F.col("vec_id").cast("int").alias("cell"),
@@ -949,17 +941,13 @@ def bench_incremental_hll(spark, sf_dir: str, work_dir: str) -> dict:
         )
 
     src = TableStore(os.path.join(work_dir, "hll_src"), n_buckets=64)
-    # changefeed_files: the sketch's table_changes(use_change_files=True)
-    # fast path then reads the persisted per-version change set instead of
-    # falling back to a full state diff — the shape the epoch cost claim
-    # is about
-    engine = CdcApplyEngine(src, EngineConfig(metrics=False, changefeed_files=True))
+    engine = CdcApplyEngine(src, EngineConfig(metrics=False))
     sk = IncrementalHllSketch(
         os.path.join(work_dir, "hll_sk"), ["event_type"], "user_id",
         n_buckets=8,
     )
     # the frequency twin rides the SAME store/epochs: count-min registers
-    # (operators/cms.py) advance from the same change files, with exact
+    # (operators/cms.py) advance from the same changefeed, with exact
     # retraction (the update epoch subtracts the pre-image counts)
     from kp_data_replication_spark.operators.cms import IncrementalCmsSketch
 
@@ -1013,8 +1001,7 @@ def bench_incremental_hll(spark, sf_dir: str, work_dir: str) -> dict:
         "dirty_buckets": out_inc["dirty_buckets"],
         "n_groups": n_groups,
         # count-min twin on the same store: full-CDF feed (exact diff,
-        # bucket-pruned — retraction needs both images, so no relaxed
-        # change-file path exists for it by construction)
+        # bucket-pruned — retraction needs both images)
         "cms_full_build_sec": round(cms_full_sec, 3),
         "cms_epoch_update_sec": round(cms_inc_sec, 3),
         "cms_register_updates_epoch": cms_inc["n_register_updates"],
@@ -1118,7 +1105,7 @@ def bench_view_crossover(spark, work_dir: str) -> dict:
     Round-4's rows compared a materializing epoch against the bare scan,
     which at toy scale inverted the story. The claim this section
     demonstrates: epoch cost stays ~flat as the base grows (it reads the
-    change files + dirty buckets only) while rebuild grows with the
+    dirty buckets only) while rebuild grows with the
     table — the curves cross inside this sweep, without extrapolation."""
     from pyspark.sql import functions as F
 
@@ -1184,9 +1171,7 @@ def bench_view_crossover(spark, work_dir: str) -> dict:
     for B in bases:
         wd = os.path.join(work_dir, f"xover_{B}")
         src = TableStore(os.path.join(wd, "src"), n_buckets=256)
-        engine = CdcApplyEngine(
-            src, EngineConfig(metrics=False, changefeed_files=True)
-        )
+        engine = CdcApplyEngine(src, EngineConfig(metrics=False))
         engine.apply_batch(envelope(spark.range(B), "c", 0, content_v1), 0)
 
         dim = TableStore(os.path.join(wd, "dim"), n_buckets=4)

@@ -389,7 +389,7 @@ def main(argv: list[str] | None = None) -> None:
     fg = sub.add_parser(
         "forget",
         help="right-to-be-forgotten / takedown: hard-delete keys from live "
-             "state AND all retained history, change files, tombstones "
+             "state AND all retained history and tombstones "
              "(GDPR Article-17; vacuum alone keeps serving them via time "
              "travel)")
     fg.add_argument("target")

@@ -155,11 +155,7 @@ class IncrementalAnnIndex:
         if last > 0:
             src.record_consumer(consumer, last)
 
-        # allow_relaxed: the index is a terminal state-converging consumer —
-        # a spurious net-nil change re-assigns an identical cell row
-        ch = table_changes(
-            spark, src, last, head, use_change_files=True, allow_relaxed=True
-        )
+        ch = table_changes(spark, src, last, head)
         is_del = F.col(CHANGE_TYPE_COL) == "delete"
         upserts = ch.filter(~is_del).select("repo", "path", vec_col)
         deletes = ch.filter(is_del).select("repo", "path")

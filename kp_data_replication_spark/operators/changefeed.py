@@ -209,54 +209,20 @@ def table_changes(
     v_from: int,
     v_to: int | None = None,
     key_cols: list[str] | None = None,
-    use_change_files: bool = False,
-    allow_relaxed: bool = False,
 ) -> DataFrame:
     """Changefeed between two committed versions of a :class:`TableStore`.
 
     ``v_from`` may be 0 (empty table — everything in ``v_to`` is an
     insert); ``v_to`` defaults to the current version. Only buckets whose
     manifest file lists differ are read (see :func:`changed_buckets`).
-    Raises if either manifest has been vacuumed away.
-
-    ``use_change_files``: when EVERY version in (v_from, v_to] carries a
-    persisted change file (EngineConfig.changefeed_files — the Delta CDF
-    analogue), read those instead of diffing states: O(batch) per version,
-    no join over table data. Semantics are RELAXED vs the exact diff: the
-    newest change per key wins across the range, but a key whose net
-    change is nil (inserted then deleted; updated back to its old image;
-    an upsert writing the identical row) may emit a spurious final change
-    the state diff would suppress — idempotent for a terminal
-    state-converging consumer like the dedup index, which is who opts in.
-    ``cascade_catchup`` must NOT opt in: its bidirectional echo damping
-    relies on exact-diff emptiness, and a relaxed feed would keep an A<->B
-    echo alive indefinitely. Falls back to the exact diff when any version
-    lacks a change file (older commits, rewrites, LWW writers).
-
-    The boundary is MECHANISM, not convention (round-3 verdict): the fast
-    path requires ``allow_relaxed=True`` — a terminal consumer's explicit
-    acceptance of the relaxed contract — and its output schema is marked
-    (``_change_type`` field metadata ``{"relaxed": true}``) so
-    ``_encode_envelope`` refuses to re-encode it as a cascade batch even
-    if a caller smuggles the DataFrame across the API.
+    Raises if either manifest has been vacuumed away. Keys a
+    :meth:`TableStore.forget_keys` scrub erased from history surface as
+    deletes from its key-only markers.
     """
     if v_to is None:
         v_to = store.current_version()
     if v_to < v_from:
         raise ValueError(f"v_to={v_to} < v_from={v_from}")
-    if use_change_files and v_from > 0:
-        if not allow_relaxed:
-            raise ValueError(
-                "use_change_files=True reads the RELAXED change-file feed "
-                "(net-nil keys may emit spurious final changes) — safe only "
-                "for terminal state-converging consumers, never for "
-                "cascades/echo-damped flows. Pass allow_relaxed=True to "
-                "accept that contract, or drop use_change_files for the "
-                "exact state diff."
-            )
-        fast = _changes_from_files(spark, store, v_from, v_to, key_cols)
-        if fast is not None:
-            return fast
     p, q = narrow_versions(store, v_from, v_to)
     dirty = changed_buckets(store, p, q)
     # include_deleted: a persisted LWW tombstone is a state transition like
@@ -358,11 +324,10 @@ def table_changes_cdf(
         downstream aggregate must retract);
       * states are read logically (LWW tombstones hidden), so a row that
         became a tombstone surfaces as a plain ``delete`` of its last
-        live image — an aggregate never sees stamp-only tombstone rows;
-      * there is no relaxed change-file fast path: persisted change files
-        carry post-images only, and a net-nil spurious change would
-        retract/add unbalanced contributions. Exact state diff always,
-        manifest-bucket pruned like every incremental read.
+        live image — an aggregate never sees stamp-only tombstone rows.
+
+    Like :func:`table_changes` it is the exact state diff, manifest-bucket
+    pruned like every incremental read.
     """
     if v_to is None:
         v_to = store.current_version()
@@ -394,67 +359,6 @@ def table_changes_cdf(
     new = store.read_state(spark, buckets=dirty, version=q)
     return diff_states(old, new, key_cols, emit_preimages=True).withColumn(
         VERSION_COL, F.lit(v_to).cast("long")
-    )
-
-
-def _changes_from_files(
-    spark: SparkSession,
-    store: TableStore,
-    v_from: int,
-    v_to: int,
-    key_cols: list[str] | None,
-) -> DataFrame | None:
-    """Assemble the (relaxed) changefeed from persisted per-version change
-    files; None when any version in range lacks one. Multi-version ranges
-    collapse to the newest change per key (max_by over version)."""
-    key_cols = key_cols or KEY_COLS
-    rels = []
-    for v in range(v_from + 1, v_to + 1):
-        m = store.manifest(v)
-        if m is None:
-            return None
-        if m.get("forget_deletes"):
-            # a forget_keys redaction in range: its deletes exist ONLY as
-            # key markers the exact-diff path unions in — fall back
-            return None
-        if m.get("row_preserving") or m.get("changefeed_skip"):
-            # physical-only rewrite / replica-local tombstone GC: logically
-            # nil — a maintenance pass must not knock the O(batch) fast
-            # path back to the exact state diff
-            continue
-        if "changes" not in m:
-            return None
-        rels.append((v, m["changes"]))
-    if not rels:
-        # nothing but maintenance in range: fall back to the exact diff,
-        # which narrow_versions collapses to an empty O(1) read
-        return None
-    parts = []
-    for v, rel in rels:
-        df = spark.read.parquet(os.path.join(store.root, rel))
-        parts.append(df.withColumn("_v", F.lit(v).cast("long")))
-    u = parts[0]
-    for p in parts[1:]:
-        # additive schema drift across versions: null-pad older files
-        u = u.unionByName(p, allowMissingColumns=True)
-    payload = [c for c in u.columns if c not in key_cols]
-    newest = (
-        u.groupBy(*key_cols)
-        .agg(F.max_by(F.struct(*payload), F.col("_v")).alias("_n"))
-        .select(*key_cols, *[F.col(f"_n.{c}").alias(c) for c in payload])
-    )
-    return newest.select(
-        *key_cols,
-        *[c for c in newest.columns if c not in (*key_cols, "op", "_v")],
-        F.when(F.col("op") == "d", F.lit("delete"))
-        .when(F.col("op") == "c", F.lit("insert"))
-        .otherwise(F.lit("update"))
-        # schema-metadata marker: travels with the column through selects/
-        # filters, so _encode_envelope can refuse a relaxed feed that a
-        # caller tries to cascade (the marker is the mechanism; the
-        # allow_relaxed flag is the consent)
-        .alias(CHANGE_TYPE_COL, metadata={"relaxed": True}),
-        F.lit(v_to).cast("long").alias(VERSION_COL),
     )
 
 
@@ -493,17 +397,6 @@ def _encode_envelope(
 ) -> DataFrame:
     from ..schema import LWW_DELETED_COL
 
-    if (
-        CHANGE_TYPE_COL in ch.columns
-        and ch.schema[CHANGE_TYPE_COL].metadata.get("relaxed")
-    ):
-        raise ValueError(
-            "refusing to encode a RELAXED changefeed (use_change_files) as a "
-            "cascade envelope: bidirectional echo damping relies on exact-"
-            "diff emptiness, and a relaxed feed's spurious net-nil changes "
-            "would keep an A<->B echo alive. Re-read with the exact diff "
-            "(use_change_files=False) for anything that cascades."
-        )
     data_cols = [c for c in ch.columns if c not in (CHANGE_TYPE_COL, VERSION_COL)]
     image = F.struct(*[F.col(c) for c in data_cols])
     is_del = F.col(CHANGE_TYPE_COL) == "delete"
@@ -663,11 +556,9 @@ def key_history(
     loop runs driver-side over manifests. A version is skipped with ZERO
     jobs when it is row-preserving maintenance, a replica-local GC, or
     when none of the keys' bucket file lists changed (pure manifest
-    metadata — the common case for an uncorrelated key). A version with a
-    persisted CHANGE FILE costs one tiny filtered read of that file (the
-    applied winners — at-least-once audit: a re-applied identical image
-    still shows). Only a changed version WITHOUT a change file pays two
-    key-prefiltered bucket point reads + a diff (net state transitions).
+    metadata — the common case for an uncorrelated key). A changed
+    version pays two key-prefiltered bucket point reads + a diff (net
+    state transitions).
     Bucket ids are computed per layout (rebuckets in range are handled),
     via one small Spark job per distinct layout, not per version.
     """
@@ -698,8 +589,6 @@ def key_history(
         ).collect()
         buckets_for[n] = {(r["repo"], r["path"]): r["b"] for r in rows}
 
-    import os as _os
-
     key_set = set(keys)
     pred = None
     for r, p in keys:
@@ -727,24 +616,6 @@ def key_history(
                 for b in my_buckets
             ):
                 continue
-        if "changes" in m:
-            ch = spark.read.parquet(_os.path.join(store.root, m["changes"]))
-            data_cols = [
-                c for c in ch.columns if c not in ("repo", "path", "op")
-            ]
-            op = F.col("op")
-            frames.append(
-                ch.filter(pred).select(
-                    "repo", "path",
-                    F.when(op == "c", F.lit("insert"))
-                    .when(op == "u", F.lit("update"))
-                    .otherwise(F.lit("delete"))
-                    .alias(CHANGE_TYPE_COL),
-                    *data_cols,
-                    F.lit(v).cast("long").alias(VERSION_COL),
-                )
-            )
-            continue
         prev_buckets = (
             my_buckets
             if prev is None or int(prev["n_buckets"]) == n_b
@@ -834,10 +705,8 @@ def export_changefeed_json(
         lsn (= source version) stays monotone per partition;
       * files appear ATOMICALLY (temp + os.replace) — a tailing reader
         never sees a partial file;
-      * the EXACT state diff per version (never the relaxed change-file
-        path — `_encode_envelope` refuses it by mechanism), so an
-        exported A->B->A ring stays echo-damped like the in-process
-        cascade;
+      * the EXACT state diff per version, so an exported A->B->A ring
+        stays echo-damped like the in-process cascade;
       * crash between file write and cursor write replays that version
         into the SAME filename (deterministic name, atomic replace) — and
         even if the reader consumed the earlier copy, redelivery dedups

@@ -14,8 +14,7 @@ self-join.
 
 Inherits the dedup-index skeleton wholesale (manifest-pruned changefeed
 read, dirty-bucket MERGE on the index store, writer-fenced resume,
-retention auto-pin, relaxed change-file fast path — safe for the same
-terminal-state-converging reason): only the per-document FEATURE differs.
+retention auto-pin): only the per-document FEATURE differs.
 Fingerprints are per-document local state, so insert/update/delete map to
 replace/replace/retract exactly like band signatures do.
 

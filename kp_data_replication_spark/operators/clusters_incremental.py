@@ -160,14 +160,9 @@ class IncrementalClusterIndex:
                 affected = idx_state.select("repo", "path").cache()
                 cached.append(affected)
             else:
-                # 1. changed keys (upserts AND deletes; relaxed fast path is
-                #    safe: a spurious net-nil change only widens the
-                #    re-clustered set, which converges to the same labels)
+                # 1. changed keys (upserts AND deletes)
                 chg = (
-                    table_changes(
-                        spark, src, last, head,
-                        use_change_files=True, allow_relaxed=True,
-                    )
+                    table_changes(spark, src, last, head)
                     .select("repo", "path")
                     .distinct()
                 )

@@ -211,8 +211,7 @@ class IncrementalCmsSketch:
         if last > 0:
             src.record_consumer(consumer, last)
 
-        # full-CDF feed: retraction needs both images, so no relaxed
-        # change-file path exists for this view by construction
+        # full-CDF feed: retraction needs both images
         cdf = table_changes_cdf(spark, src, last, head)
         sign = F.when(
             F.col(CHANGE_TYPE_COL).isin("insert", "update_postimage"),

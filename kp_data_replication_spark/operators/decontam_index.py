@@ -39,9 +39,7 @@ Scale shape (100 TB corpus / 10^9 docs):
 
 Exactly-once / resume: identical to the parent (writer-fenced per source
 version, retention auto-pin via the consumer registry) — a crashed update
-resumes where it left off; the relaxed change-file fast path is safe here
-for the same reason it is for the dedup index (terminal state-converging
-consumer: a spurious net-nil change re-derives an identical fingerprint).
+resumes where it left off.
 """
 
 from __future__ import annotations

@@ -35,16 +35,6 @@ def filter_applied(events: DataFrame, lineage: DataFrame) -> DataFrame:
     )
 
 
-def dedup_in_batch(events: DataFrame) -> DataFrame:
-    """Collapse duplicate (partition, lsn) deliveries inside one batch.
-
-    Payloads of duplicates are identical (same produced record re-read), so
-    dropDuplicates is safe. Only needed for exact metrics; the compaction
-    aggregate already collapses duplicates for the data path.
-    """
-    return events.dropDuplicates(["partition", "lsn"])
-
-
 def applied_watermarks(events: DataFrame) -> DataFrame:
     """A1: per-partition max offset + count — the checkpoint record content
     ("last committed offset in the source topic/partitions",
@@ -52,39 +42,6 @@ def applied_watermarks(events: DataFrame) -> DataFrame:
     return events.groupBy("partition").agg(
         F.max("lsn").alias("applied_lsn"),
         F.count(F.lit(1)).alias("n_applied"),
-    )
-
-
-def advance_lineage(lineage: DataFrame, batch_marks: DataFrame, epoch: int) -> DataFrame:
-    """Merge existing lineage with this batch's watermarks (monotone max).
-
-    Watermarks never move backwards — a re-delivered older range cannot
-    regress the applied offset (exactly-once fencing, docs/consideration.md:62).
-    """
-    old = lineage.select(
-        "partition",
-        F.col("applied_lsn").alias("_old_lsn"),
-        F.col("n_applied").alias("_old_n"),
-    )
-    new = batch_marks.select(
-        "partition",
-        F.col("applied_lsn").alias("_new_lsn"),
-        F.col("n_applied").alias("_new_n"),
-    )
-    return (
-        old.join(new, "partition", "full_outer")
-        .select(
-            "partition",
-            F.greatest(
-                F.coalesce(F.col("_old_lsn"), F.lit(-1)),
-                F.coalesce(F.col("_new_lsn"), F.lit(-1)),
-            ).alias("applied_lsn"),
-            (F.coalesce(F.col("_old_n"), F.lit(0)) + F.coalesce(F.col("_new_n"), F.lit(0))).alias(
-                "n_applied"
-            ),
-            F.lit(epoch).cast("long").alias("epoch"),
-            F.current_timestamp().alias("updated_ts"),
-        )
     )
 
 

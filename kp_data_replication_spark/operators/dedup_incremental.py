@@ -152,14 +152,7 @@ class IncrementalDedupIndex:
         if last > 0:
             src.record_consumer(consumer, last)
 
-        # change-file fast path when the source persists them
-        # (EngineConfig.changefeed_files): O(batch) read, no state diff;
-        # exact-diff fallback otherwise — manifest-bucket pruned either way
-        # allow_relaxed: the index is a terminal state-converging consumer —
-        # a spurious net-nil change re-derives an identical index row
-        ch = table_changes(
-            spark, src, last, head, use_change_files=True, allow_relaxed=True
-        )
+        ch = table_changes(spark, src, last, head)
         is_del = F.col(CHANGE_TYPE_COL) == "delete"
         upserts = ch.filter(~is_del).select("repo", "path", text_col)
         deletes = ch.filter(is_del).select("repo", "path")

@@ -23,8 +23,6 @@ the retention timestamp (``rewrite_buckets(cluster_by=[ts_col])`` — the
 natural layout for append-mostly event tables, where file min/max on
 event time is tight even unclustered), an expiry pass touches only the
 files that actually hold the expiring prefix: O(expired), not O(table).
-The commit also writes the deletes as a CHANGE FILE, so downstream
-incremental readers on the fast path stay O(batch).
 
 LWW tables: persisted tombstone rows carry null data columns, so a
 predicate over data columns evaluates NULL and they are KEPT — conflict
@@ -39,7 +37,6 @@ from pyspark.sql import SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-from ..schema import KEY_COLS
 from ..sources.table_store import (
     BUCKET_COL,
     TableStore,
@@ -155,13 +152,6 @@ def expire_rows(
                 "files_skipped": files_skipped}
     keep = slice_.filter(~pred)
 
-    data_cols = [c for c in slice_.columns if c not in KEY_COLS]
-    changes = expired.select(
-        *KEY_COLS,
-        F.lit("d").alias("op"),
-        *[F.lit(None).cast(slice_.schema[c].dataType).alias(c)
-          for c in data_cols],
-    )
     row_schema = T.StructType(slice_.schema.fields)
     store.commit(
         keep.withColumn(BUCKET_COL, bucket_expr(store.n_buckets)),
@@ -173,7 +163,6 @@ def expire_rows(
         head + 1,
         row_schema,
         writer_id=writer_id,
-        changes=changes,
         expected_version=head,
         retain={b: fs for b, fs in retain.items() if fs},
     )

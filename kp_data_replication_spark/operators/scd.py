@@ -28,8 +28,7 @@ LWW tombstones surface as plain deletes, physical rewrites and
 maintenance versions emit nothing), so intermediate images inside a
 multi-version catch-up are preserved, not collapsed: catching up 3
 versions in one call produces byte-identical history to three per-epoch
-calls. The relaxed change-file fast path is deliberately NOT used here —
-a spurious net-nil change would mint a phantom interval.
+calls.
 
 Scale shape (100 TB source / 10^10 rows):
   * Per-epoch cost is O(changed rows in the range), never O(history):

@@ -184,11 +184,7 @@ class IncrementalHllSketch:
         if last > 0:
             src.record_consumer(consumer, last)
 
-        # allow_relaxed: monotone max — a spurious net-nil change re-folds
-        # a value some earlier boundary already counted; idempotent
-        ch = table_changes(
-            spark, src, last, head, use_change_files=True, allow_relaxed=True
-        )
+        ch = table_changes(spark, src, last, head)
         seen = ch.filter(F.col(CHANGE_TYPE_COL) != "delete").select(
             *self.group_cols, F.expr(self.value_expr).alias("_v")
         )

@@ -22,13 +22,12 @@ epoch the write cost is O(changed docs x terms/doc) regardless of index
 size; reads pay the last-layer-wins window only on still-layered buckets.
 
 Retraction needs the OLD terms, so the update reads the full-CDF
-changefeed (``table_changes_cdf`` — exact diff with pre-images; the
-relaxed change-file path carries post-images only): terms present in a
-doc's pre-image but not its post-image become tombstone postings; every
-post-image term is (re)asserted with its new tf. Postings carry the doc
-length ``dl`` denormalized (the Lucene norms trade): a doc's postings are
-all rewritten when the doc changes anyway, and search then never joins a
-doc-length table per posting. A slim (doc -> dl) sidecar exists only for
+changefeed (``table_changes_cdf`` — exact diff with pre-images): terms
+present in a doc's pre-image but not its post-image become tombstone
+postings; every post-image term is (re)asserted with its new tf. Postings
+carry the doc length ``dl`` denormalized (the Lucene norms trade): a doc's
+postings are all rewritten when the doc changes anyway, and search then
+never joins a doc-length table per posting. A slim (doc -> dl) sidecar exists only for
 the corpus constants N and avgdl.
 
 Keys/buckets: a posting's TableStore key is (repo=term, path=doc-key)

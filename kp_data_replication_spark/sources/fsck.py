@@ -44,7 +44,7 @@ def fsck(store, spark=None, deep: bool = False) -> dict[str, Any]:
     Checks (cheap, always run):
       P1  pointer resolves to a parseable manifest whose own ``version``
           matches the pointer
-      F1  every data/lineage/changes file each RETAINED manifest references
+      F1  every data/lineage file each RETAINED manifest references
           exists on disk
       B1  recorded per-bucket bytes equal the on-disk sum (current version)
       S1  manifest zonemap entries refer only to live files, bounds are
@@ -105,9 +105,8 @@ def fsck(store, spark=None, deep: bool = False) -> dict[str, Any]:
     live: set[str] = set()
     for v, m in retained.items():
         rels = [p for fs in m["buckets"].values() for p in fs]
-        for extra in (m.get("lineage"), m.get("changes")):
-            if extra:
-                rels.append(extra)
+        if m.get("lineage"):
+            rels.append(m["lineage"])
         for rel in rels:
             live.add(rel)
             path = os.path.join(store.root, rel)

@@ -950,13 +950,12 @@ class TableStore:
         self,
         merged_dirty: DataFrame | None,
         dirty_buckets: list[int],
-        lineage: DataFrame | list[dict],
+        lineage: list[dict],
         epoch: int,
         row_schema: T.StructType,
         clustered: bool = False,
         writer_id: str = "default",
         write_salt: int = 1,
-        changes: DataFrame | None = None,
         expected_version: int | None = None,
         mor: bool = False,
         publish: bool = True,
@@ -972,8 +971,8 @@ class TableStore:
         commit and vacuum refuse while it is pending.
 
         ``merged_dirty`` must contain BUCKET_COL; only rows of
-        ``dirty_buckets`` may be present. ``lineage`` may be a DataFrame or
-        plain rows (written driver-side — it is one row per log partition).
+        ``dirty_buckets`` may be present. ``lineage`` is plain rows, written
+        driver-side (one row per log partition).
         Returns the new version number.
 
         ``clustered``: caller guarantees ``merged_dirty``'s existing
@@ -983,16 +982,6 @@ class TableStore:
         shuffle of the merged output — is skipped. Only file layout depends
         on this hint, never row placement: partitionBy routes every row to
         its bucket directory regardless.
-
-        ``changes`` (optional): the version's row-level change set (key
-        cols + op + post-image data cols), persisted as
-        ``changes/v{n}.parquet`` and referenced from the manifest — the
-        Delta CDF ``_change_data`` analogue. An incremental reader
-        (:func:`~..operators.changefeed.table_changes` with
-        ``use_change_files=True``) then costs O(batch) with NO state diff
-        join. Written before the manifest, so the same crash-idempotency
-        argument applies; versions without change files (older commits,
-        rewrites) simply fall back to the state diff.
 
         ``mor`` (merge-on-read commit — Iceberg v2 equality-delete / Delta
         deletion-vector analogue): ``merged_dirty`` is the BATCH's rows
@@ -1170,40 +1159,30 @@ class TableStore:
                         )
 
         _phase("retain")
-        changes_rel = None
-        if changes is not None and dirty_buckets:
-            changes_rel = f"changes/v{version}.parquet"
-            changes_dir = os.path.join(self.root, changes_rel)
-            shutil.rmtree(changes_dir, ignore_errors=True)
-            changes.write.mode("overwrite").parquet(changes_dir)
-            _phase("changes")
 
         lineage_rel = f"lineage/v{version}.parquet"
         lineage_dir = os.path.join(self.root, lineage_rel)
         shutil.rmtree(lineage_dir, ignore_errors=True)
-        if isinstance(lineage, list):
-            import pyarrow as pa
-            import pyarrow.parquet as pq
+        import pyarrow as pa
+        import pyarrow.parquet as pq
 
-            os.makedirs(lineage_dir, exist_ok=True)
-            from ..schema import DEFAULT_GROUP
+        os.makedirs(lineage_dir, exist_ok=True)
+        from ..schema import DEFAULT_GROUP
 
-            tbl = pa.Table.from_pylist(
-                [{"consumer_group": DEFAULT_GROUP, **r} for r in lineage],
-                schema=pa.schema(
-                    [
-                        ("consumer_group", pa.string()),
-                        ("partition", pa.int32()),
-                        ("applied_lsn", pa.int64()),
-                        ("epoch", pa.int64()),
-                        ("n_applied", pa.int64()),
-                        ("updated_ts", pa.timestamp("us")),
-                    ]
-                ),
-            )
-            pq.write_table(tbl, os.path.join(lineage_dir, "part-0.parquet"))
-        else:
-            lineage.coalesce(1).write.mode("overwrite").parquet(lineage_dir)
+        tbl = pa.Table.from_pylist(
+            [{"consumer_group": DEFAULT_GROUP, **r} for r in lineage],
+            schema=pa.schema(
+                [
+                    ("consumer_group", pa.string()),
+                    ("partition", pa.int32()),
+                    ("applied_lsn", pa.int64()),
+                    ("epoch", pa.int64()),
+                    ("n_applied", pa.int64()),
+                    ("updated_ts", pa.timestamp("us")),
+                ]
+            ),
+        )
+        pq.write_table(tbl, os.path.join(lineage_dir, "part-0.parquet"))
         _phase("lineage")
 
         writers = dict(prev.get("writers", {})) if prev else {}
@@ -1220,8 +1199,6 @@ class TableStore:
         }
         if mor_counts:
             manifest["mor"] = mor_counts
-        if changes_rel is not None:
-            manifest["changes"] = changes_rel
         live = {p for fs in buckets_map.values() for p in fs}
         new_stats = {p: s for p, s in new_stats.items() if p in live}
         if new_stats:
@@ -1677,9 +1654,6 @@ class TableStore:
             manifest["stats"] = {
                 _abs(p): s for p, s in m["stats"].items()
             }
-        # NOT carried: the source version's change-file pointer — the
-        # clone's v1 is a creation snapshot, not that version's delta
-        # (same reasoning as rewrite_buckets).
         os.makedirs(os.path.join(target_root, "manifests"), exist_ok=True)
         mpath = os.path.join(target_root, "manifests", "v1.json")
         _stamp_commit_ts(manifest)
@@ -1747,8 +1721,6 @@ class TableStore:
         the exact-diff changefeed emits the COMPENSATING changes
         (deletes/updates undoing the rolled-back tail), so downstream
         cascades converge to the restored state instead of diverging.
-        No change file is written — the relaxed fast path cannot
-        misrepresent a restore; readers fall back to the exact diff.
 
         ``rewind=False`` (default, Delta semantics): the current lineage
         watermarks and writer-epoch map are carried forward — a resumed
@@ -2011,9 +1983,8 @@ class TableStore:
             "bucket_bytes": bucket_bytes,
             # physical-only rewrite: state(v) == state(v-1) row-for-row,
             # tombstones included. Incremental readers narrow their diff
-            # range across this version (changefeed.narrow_versions) and
-            # the change-file fast path skips it — no data files opened to
-            # learn the diff is empty.
+            # range across this version (changefeed.narrow_versions) — no
+            # data files opened to learn the diff is empty.
             "row_preserving": True,
         }
         manifest.pop("changefeed_skip", None)  # never inherit a purge's flag
@@ -2026,10 +1997,6 @@ class TableStore:
             m["schema"],
             spark=spark,
         )
-        # a rewrite is a LOGICAL no-op: it must not inherit the previous
-        # version's change-file pointer (a fast-path changefeed reader
-        # would re-emit that version's changes for this one)
-        manifest.pop("changes", None)
         # a rewritten bucket's merge-on-read layers are FOLDED into its new
         # base files (read_state resolved them; the resolution columns are
         # file-only and never written back)
@@ -2158,7 +2125,6 @@ class TableStore:
             m["schema"],
             spark=spark,
         )
-        manifest.pop("changes", None)  # logical no-op: see rewrite_buckets
         manifest.pop("mor", None)  # full rewrite folds every delta layer
         mpath = os.path.join(self.root, "manifests", f"v{version}.json")
         _stamp_commit_ts(manifest)
@@ -2262,7 +2228,6 @@ class TableStore:
             m["schema"],
             spark=spark,
         )
-        manifest.pop("changes", None)
         mpath = os.path.join(self.root, "manifests", f"v{version}.json")
         _stamp_commit_ts(manifest)
         with open(mpath + ".tmp", "w") as f:
@@ -2284,8 +2249,8 @@ class TableStore:
         """Right-to-be-forgotten / repo-takedown scrub: hard-delete the
         given ``(repo, path)`` keys — or every path of the given
         ``repos`` — from the LIVE state AND from every retained
-        historical version, change file, and tombstone (the GDPR
-        Article-17 / DMCA-takedown operation Delta and Iceberg both
+        historical version and tombstone (the GDPR Article-17 /
+        DMCA-takedown operation Delta and Iceberg both
         document as "vacuum is not enough": time travel would otherwise
         keep serving the data; the reference's replicated-cluster
         topology, docs/index.md:32-52, makes every replica run it
@@ -2303,11 +2268,10 @@ class TableStore:
            pruned where stats exist) are probed in ONE batched job; files
            actually containing a key are rewritten 1:1 without those rows,
            every retained manifest's references are swapped atomically
-           (bytes + zonemaps refreshed), change files are filtered the
-           same way, and only then are the original files deleted. A crash
-           mid-scrub leaves both old and new files readable and the
-           operation idempotent to re-run; unreferenced leftovers are
-           vacuum's ordinary crash orphans.
+           (bytes + zonemaps refreshed), and only then are the original
+           files deleted. A crash mid-scrub leaves both old and new files
+           readable and the operation idempotent to re-run; unreferenced
+           leftovers are vacuum's ordinary crash orphans.
 
         Scale shape: the probe reads only key columns of bucket+zonemap
         pruned files; rewrites touch exactly the files that contain the
@@ -2325,7 +2289,7 @@ class TableStore:
         clones first). An audit line is appended to ``_redactions.jsonl``.
 
         Returns ``{version, live_deleted, files_rewritten, rows_removed,
-        manifests_updated, change_files_rewritten}``.
+        manifests_updated}``.
         """
         keys = list(keys or [])
         repos = list(repos or [])
@@ -2346,8 +2310,7 @@ class TableStore:
         head_m = self.current_manifest()
         if head_m is None:
             return {"version": 0, "live_deleted": 0, "files_rewritten": 0,
-                    "rows_removed": 0, "manifests_updated": 0,
-                    "change_files_rewritten": 0}
+                    "rows_removed": 0, "manifests_updated": 0}
 
         def _match_col():
             preds = [
@@ -2415,7 +2378,6 @@ class TableStore:
             else:
                 manifest.pop("mor", None)
             manifest.pop("row_preserving", None)
-            manifest.pop("changes", None)  # the diff IS the delete set
             manifest.pop("changefeed_skip", None)
             manifest.pop("forget_deletes", None)  # new markers attached below
             manifest.pop("restored_from", None)
@@ -2598,8 +2560,6 @@ class TableStore:
         # swap references in every retained manifest (atomic per manifest);
         # originals are deleted only after every manifest points away
         manifests_updated = 0
-        change_files_rewritten = 0
-        stale_change_dirs: list[str] = []
         new_paths = set(mapping.values())
         for v in scan_versions:
             try:
@@ -2645,35 +2605,6 @@ class TableStore:
                         m["stats"] = stats
                     else:
                         m.pop("stats", None)
-            # change files carry the keys' row images too
-            ch_rel = m.get("changes")
-            if ch_rel:
-                ch_dir = os.path.join(self.root, ch_rel)
-                if os.path.isdir(ch_dir):
-                    ch = spark.read.parquet(ch_dir)
-                    n_hit = ch.filter(_match_col()).count()
-                    if n_hit:
-                        # ALWAYS a fresh seq-suffixed path: a second
-                        # forget whose keys hit an already-rewritten
-                        # change file must never overwrite the very path
-                        # it is reading from (Spark refuses; engines
-                        # without the check would destroy the input)
-                        cseq = 0
-                        while os.path.exists(os.path.join(
-                            self.root, f"changes/forget_v{v}_{cseq}.parquet"
-                        )):
-                            cseq += 1
-                        new_ch = f"changes/forget_v{v}_{cseq}.parquet"
-                        (
-                            ch.filter(~_match_col())
-                            .coalesce(1)
-                            .write.mode("overwrite")
-                            .parquet(os.path.join(self.root, new_ch))
-                        )
-                        m["changes"] = new_ch
-                        changed = True
-                        change_files_rewritten += 1
-                        stale_change_dirs.append(ch_dir)
             if changed:
                 mpath = os.path.join(self.root, "manifests", f"v{v}.json")
                 with open(mpath + ".tmp", "w") as f:
@@ -2697,10 +2628,6 @@ class TableStore:
                 )
                 if os.path.exists(crc):
                     os.remove(crc)
-        # stale change dirs replaced above — removed only after every
-        # manifest already points at its rewritten successor
-        for d in stale_change_dirs:
-            shutil.rmtree(d, ignore_errors=True)
 
         audit = {
             "keys": keys, "repos": repos, "version": version,
@@ -2708,7 +2635,6 @@ class TableStore:
             "files_rewritten": len(mapping),
             "rows_removed": int(rows_removed),
             "manifests_updated": manifests_updated,
-            "change_files_rewritten": change_files_rewritten,
         }
         with open(os.path.join(self.root, "_redactions.jsonl"), "a") as f:
             f.write(json.dumps(audit) + "\n")
@@ -2722,8 +2648,8 @@ class TableStore:
         The per-version log reports what each commit CHANGED: rows/bytes
         deltas from the manifest's own stats, dirty bucket count, schema
         fields added/removed vs the previous retained version (the
-        schema-registry compatibility trail of docs/consideration.md:15-18),
-        MoR layer counts, and whether a changefeed file rides the commit.
+        schema-registry compatibility trail of docs/consideration.md:15-18)
+        and MoR layer counts.
         """
         head = self.current_version()
         out: dict = {
@@ -2772,7 +2698,6 @@ class TableStore:
                 "n_files": sum(len(fs) for fs in m["buckets"].values()),
                 "bytes": total,
                 "bytes_delta": total - prev_bytes,
-                "has_changes": "changes" in m,
                 "mor_layered_buckets": len(m.get("mor", {})),
             }
             if prev_fields is not None:
@@ -2876,8 +2801,6 @@ class TableStore:
                 live.update(files)
             if m.get("lineage"):
                 live.add(m["lineage"])
-            if m.get("changes"):
-                live.add(m["changes"])
             if m.get("forget_deletes"):
                 live.add(m["forget_deletes"])
 

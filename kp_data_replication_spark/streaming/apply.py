@@ -88,9 +88,6 @@ class EngineConfig:
     # broadcasts the join-back only if the estimate fits — a giant batch
     # degrades to a shuffle join instead of OOMing the driver.
     broadcast_threshold: str | None = "256m"
-    # key->partition affinity contract audit: "fail" (default — a violation
-    # silently risks older images overwriting newer rows), "warn", or "off"
-    affinity_check: str = "fail"
     # hot-BUCKET write salting (reference skew discussion,
     # docs/mm2-provisioning.md:116-124): on the non-clustered write path
     # (one reduce task per dirty bucket) a bucket holding more than this
@@ -108,22 +105,15 @@ class EngineConfig:
     # conflict_policy, cluster_id) are refused with a warning: changing
     # them mid-stream would corrupt lineage/stamp semantics.
     config_file: str | None = None
-    # persist each version's row-level change set (Delta CDF
-    # `_change_data` analogue, opt-in like delta.enableChangeDataFeed):
-    # incremental readers (dedup index, cascades) then cost O(batch) per
-    # version with NO state-diff join. One extra batch-sized write per
-    # epoch; ignored under conflict_policy="lww" (a losing LWW write is
-    # not a change, only the state diff knows).
-    changefeed_files: bool = False
     # retention.ms (provisioning.md:188), by mechanism: rows whose
     # retention-timestamp column (epoch MILLISECONDS, like the Kafka
     # config) fell behind the window are expired every
-    # retention_every_epochs by a maintenance commit whose version diff —
-    # and change file — shows them as ordinary deletes, so every
-    # changefeed consumer (cascades, indexes, agg/join views) retracts
-    # them exactly (operators/retention.py). Candidate files come from
-    # manifest zonemaps: a pass over a time-clustered table is
-    # O(expired), not O(table).
+    # retention_every_epochs by a maintenance commit whose version diff
+    # shows them as ordinary deletes, so every changefeed consumer
+    # (cascades, indexes, agg/join views) retracts them exactly
+    # (operators/retention.py). Candidate files come from manifest
+    # zonemaps: a pass over a time-clustered table is O(expired), not
+    # O(table).
     retention_ms: int | None = None
     retention_ts_col: str = "updated_at"
     retention_every_epochs: int = 1
@@ -260,8 +250,7 @@ class EngineConfig:
 # deliberately absent — changing them mid-stream corrupts lineage/stamps
 RELOADABLE_FIELDS = {
     "whitelist", "blacklist", "normalize", "metrics",
-    "shuffle_partitions", "broadcast_threshold",
-    "affinity_check", "write_salt_target_keys", "changefeed_files",
+    "shuffle_partitions", "broadcast_threshold", "write_salt_target_keys",
     "dlq_dir", "check_constraints", "schema_policy", "smt_chain",
     "txn_timeout_epochs",
     "retention_ms", "retention_ts_col", "retention_every_epochs",
@@ -644,7 +633,7 @@ class CdcApplyEngine:
             )
             n_violations = sum(r["n_affinity_violations"] for r in stats)
             if n_violations:
-                msg = (
+                raise ValueError(
                     f"{n_violations} key(s) have events in more than one log "
                     "partition this batch — the key->partition affinity "
                     "contract (Kafka key-hash routing, "
@@ -652,12 +641,6 @@ class CdcApplyEngine:
                     "applied watermarks would under-advance and re-delivered "
                     "older images could overwrite newer target rows."
                 )
-                if config.affinity_check == "fail":
-                    raise ValueError(msg)
-                if config.affinity_check == "warn":
-                    import warnings
-
-                    warnings.warn(msg, stacklevel=2)
             dirty = sorted({r[BUCKET_COL] for r in stats})
             n_changed = sum(r["n_keys"] for r in stats)
             marks: dict[int, dict] = {}
@@ -842,17 +825,10 @@ class CdcApplyEngine:
                     write_salt = min(
                         16, -(-hottest // config.write_salt_target_keys)
                     )
-            changes_df = None
-            if (
-                config.changefeed_files
-                and merged is not None
-                and config.conflict_policy == "source-wins"
-            ):
-                changes_df = batch_side.drop("partition", "lsn", "ts_ms")
             version = self.store.commit(
                 merged, dirty, new_lineage, epoch, row_schema,
                 clustered=clustered, writer_id=writer_id,
-                write_salt=write_salt, changes=changes_df,
+                write_salt=write_salt,
                 expected_version=base_version, mor=mor_delta,
             )
             phases["merge_commit"] = round(_time.time() - t0, 3)

@@ -433,85 +433,6 @@ def test_bidirectional_cascade_converges_without_ping_pong(spark, tmp_path):
     assert a.current_version() <= 6 and b.current_version() <= 6
 
 
-def test_change_files_fast_path_matches_diff_and_falls_back(spark, tmp_path):
-    """Persisted per-version change files (Delta CDF analogue,
-    EngineConfig.changefeed_files): the O(batch) reader matches the exact
-    state diff on real changes, collapses multi-version ranges to the
-    newest change per key, falls back to the diff when a range version
-    lacks files, and vacuum GCs expired change files."""
-    from kp_data_replication_spark.operators.changefeed import (
-        CHANGE_TYPE_COL,
-        table_changes,
-    )
-
-    d = str(tmp_path / "cl")
-    write_changelog(
-        spark, d,
-        ChangelogSpec(n_keys=60, versions_per_key=2, n_partitions=2, files=4,
-                      dup_every=0),
-    )
-    store = TableStore(str(tmp_path / "t"), n_buckets=4)
-    engine = CdcApplyEngine(
-        store, EngineConfig(metrics=False, changefeed_files=True)
-    )
-    files = sorted(f for f in os.listdir(d) if f.endswith(".parquet"))
-    for epoch, f in enumerate(files):
-        engine.apply_batch(
-            spark.read.option("mergeSchema", "true").parquet(f"{d}/{f}"), epoch
-        )
-    head = store.current_version()
-    assert head == len(files) and all(
-        "changes" in store.manifest(v) for v in store.versions()
-    )
-
-    def canon(df):
-        return sorted(
-            (r["repo"], r["path"], r[CHANGE_TYPE_COL],
-             r["content"] if r[CHANGE_TYPE_COL] != "delete" else None)
-            for r in df.collect()
-        )
-
-    # single-version range: fast path == exact diff (every emitted row is a
-    # real change here — distinct content per version in the generator)
-    fast = table_changes(spark, store, head - 1, head, use_change_files=True, allow_relaxed=True)
-    exact = table_changes(spark, store, head - 1, head)
-    assert canon(fast) == canon(exact)
-
-    # multi-version range: newest change per key wins; the fast set may
-    # carry benign extras (net-nil keys), but must AGREE with the diff on
-    # every key the diff reports, and cover all of them
-    fast_all = {(r["repo"], r["path"]): (r[CHANGE_TYPE_COL], r["content"])
-                for r in table_changes(spark, store, 1, head,
-                                       use_change_files=True, allow_relaxed=True).collect()}
-    exact_all = {(r["repo"], r["path"]): (r[CHANGE_TYPE_COL], r["content"])
-                 for r in table_changes(spark, store, 1, head).collect()}
-    for k, v in exact_all.items():
-        if v[0] == "delete":
-            # the diff carries the PRE-image for deletes; the change file
-            # has no pre-image (null) — agreement is on the delete itself
-            assert fast_all[k][0] == "delete", k
-        else:
-            assert fast_all[k][1] == v[1], k  # same final image
-    assert set(exact_all) <= set(fast_all)
-
-    # a version without change files in range -> silent exact-diff fallback
-    v_rw = store.rewrite_buckets(spark, min_files=0)["version"]
-    if v_rw > head:  # a rewrite actually happened
-        assert "changes" not in store.manifest(v_rw)
-        fb = table_changes(spark, store, head - 1, v_rw, use_change_files=True, allow_relaxed=True)
-        assert canon(fb) == canon(
-            table_changes(spark, store, head - 1, v_rw)
-        )
-
-    # vacuum GCs change files of expired versions, keeps live ones
-    import glob
-
-    n_before = len(glob.glob(str(tmp_path / "t" / "changes" / "*")))
-    store.vacuum(keep_versions=1)
-    n_after = len(glob.glob(str(tmp_path / "t" / "changes" / "*")))
-    assert n_after < n_before
-
-
 def test_vacuum_auto_pins_slow_consumer_then_releases(spark, tmp_path):
     """Retention auto-pin (round-2 VERDICT item 3): a registered cascade
     consumer's lag derives vacuum's keep-floor, so aggressive vacuum + a
@@ -617,72 +538,6 @@ def test_tags_pin_versions_through_vacuum(spark, tmp_path):
     assert store.create_tag("head", n_versions) == n_versions
 
 
-def test_relaxed_change_file_boundary_is_mechanism_not_convention(
-    spark, tmp_path
-):
-    """Round-4: the relaxed change-file fast path is fenced by MECHANISM.
-    (1) use_change_files without allow_relaxed raises with guidance;
-    (2) the relaxed output carries a schema marker and _encode_envelope
-        refuses to cascade it — even via the public changefeed_envelope
-        composition a caller might hand-roll;
-    (3) cascade_catchup on a change-file-enabled source keeps working and
-        keeps its exact-diff echo damping (bidirectional convergence is
-        covered by test_bidirectional_cascade_converges_without_ping_pong;
-        here: the cascade path yields the exact diff, not the relaxed set).
-    """
-    import pytest
-
-    from kp_data_replication_spark.operators.changefeed import (
-        _encode_envelope,
-        cascade_catchup,
-        table_changes,
-    )
-
-    d = str(tmp_path / "cl")
-    write_changelog(
-        spark, d,
-        ChangelogSpec(n_keys=40, versions_per_key=2, n_partitions=2, files=2,
-                      dup_every=0),
-    )
-    store = TableStore(str(tmp_path / "t"), n_buckets=4)
-    engine = CdcApplyEngine(
-        store, EngineConfig(metrics=False, changefeed_files=True)
-    )
-    for epoch, f in enumerate(
-        sorted(x for x in os.listdir(d) if x.endswith(".parquet"))
-    ):
-        engine.apply_batch(
-            spark.read.option("mergeSchema", "true").parquet(f"{d}/{f}"), epoch
-        )
-    head = store.current_version()
-
-    # (1) consent flag required for the relaxed contract
-    with pytest.raises(ValueError, match="allow_relaxed"):
-        table_changes(spark, store, 1, head, use_change_files=True)
-
-    # (2) a relaxed feed cannot be re-encoded as a cascade envelope
-    relaxed = table_changes(
-        spark, store, 1, head, use_change_files=True, allow_relaxed=True
-    )
-    assert relaxed.schema["_change_type"].metadata.get("relaxed") is True
-    with pytest.raises(ValueError, match="echo damping"):
-        _encode_envelope(relaxed, ["repo", "path"], 4, "repos")
-    # ... and the marker survives the selects/filters a caller might apply
-    smuggled = relaxed.filter("path is not null").select(relaxed.columns)
-    with pytest.raises(ValueError, match="echo damping"):
-        _encode_envelope(smuggled, ["repo", "path"], 4, "repos")
-
-    # (3) the cascade still runs off the exact diff on this source
-    dst = TableStore(str(tmp_path / "dst"), n_buckets=4)
-    dst_engine = CdcApplyEngine(dst, EngineConfig(metrics=False))
-    out = cascade_catchup(spark, store, dst_engine)
-    assert out["at_version"] == head and out["applied_versions"]
-    exact = table_changes(spark, store, 0, head)
-    assert dst.read_state(spark).count() == exact.filter(
-        "_change_type != 'delete'"
-    ).count()
-
-
 def test_row_preserving_maintenance_narrows_changefeed_to_zero_reads(
     spark, tmp_path, monkeypatch
 ):
@@ -767,52 +622,6 @@ def test_row_preserving_maintenance_narrows_changefeed_to_zero_reads(
 
     # a purge must never inherit the flag from a preceding rewrite
     assert "row_preserving" not in (store.manifest(v_new) or {})
-
-
-def test_change_file_fast_path_survives_maintenance_versions(spark, tmp_path):
-    """A rewrite/rebucket in the range used to knock use_change_files back
-    to the exact state diff (no change file on the maintenance version).
-    Row-preserving versions are now skipped, so the O(batch) path holds."""
-    d = str(tmp_path / "cl")
-    write_changelog(
-        spark, d,
-        ChangelogSpec(n_keys=40, versions_per_key=2, n_partitions=2, files=3,
-                      dup_every=0),
-    )
-    store = TableStore(str(tmp_path / "t"), n_buckets=4)
-    engine = CdcApplyEngine(
-        store, EngineConfig(metrics=False, changefeed_files=True)
-    )
-    files = sorted(f for f in os.listdir(d) if f.endswith(".parquet"))
-    engine.apply_batch(
-        spark.read.option("mergeSchema", "true").parquet(f"{d}/{files[0]}"), 0)
-    engine.apply_batch(
-        spark.read.option("mergeSchema", "true").parquet(f"{d}/{files[1]}"), 1)
-    store.rewrite_buckets(spark, min_files=0)  # maintenance, no change file
-    engine.apply_batch(
-        spark.read.option("mergeSchema", "true").parquet(f"{d}/{files[2]}"), 2)
-    head = store.current_version()
-
-    fast = table_changes(
-        spark, store, 1, head, use_change_files=True, allow_relaxed=True
-    )
-    # served from change files (the relaxed marker proves the fast path)
-    assert fast.schema["_change_type"].metadata.get("relaxed") is True
-    # newest-change-per-key collapse must agree with the exact diff on
-    # this fixture (no net-nil keys in it)
-    exact = table_changes(spark, store, 1, head)
-    k_fast = sorted((r["repo"], r["path"], r["_change_type"])
-                    for r in fast.select("repo", "path", "_change_type").collect())
-    k_exact = sorted((r["repo"], r["path"], r["_change_type"])
-                     for r in exact.select("repo", "path", "_change_type").collect())
-    assert k_fast == k_exact
-
-    # maintenance-only range: fast path degrades gracefully to the narrowed
-    # (empty, zero-read) exact diff instead of crashing on zero change files
-    v_rw = head - 1
-    assert table_changes(
-        spark, store, v_rw - 1, v_rw, use_change_files=True, allow_relaxed=True
-    ).count() == 0
 
 
 def test_version_as_of_timestamp_resolution(spark, stepped):

@@ -7,7 +7,6 @@ from __future__ import annotations
 
 import os
 
-import pytest
 from pyspark.sql import Row
 from pyspark.sql import functions as F
 
@@ -75,12 +74,9 @@ def _assert_parity(spark, src, index):
     assert _index_pairs(spark, index) == _full_pairs(spark, src)
 
 
-@pytest.mark.parametrize("cdf", [False, True], ids=["state-diff", "change-files"])
-def test_clone_index_tracks_insert_update_delete(spark, tmp_path, cdf):
+def test_clone_index_tracks_insert_update_delete(spark, tmp_path):
     src = TableStore(str(tmp_path / "src"), n_buckets=4)
-    engine = CdcApplyEngine(
-        src, EngineConfig(metrics=False, changefeed_files=cdf)
-    )
+    engine = CdcApplyEngine(src, EngineConfig(metrics=False))
     index = IncrementalCloneIndex(str(tmp_path / "idx"), n_buckets=4, k=K, w=W)
 
     # ---- epoch 0: inserts (planted clone pair 0/1) ----

@@ -62,18 +62,11 @@ def _assert_parity(spark, src, index):
     assert inc == full, (sorted(inc), sorted(full))
 
 
-import pytest
-
-
-@pytest.mark.parametrize("cdf", [False, True], ids=["state-diff", "change-files"])
-def test_incremental_index_tracks_insert_update_delete(spark, tmp_path, cdf):
-    """cdf=False exercises the exact state-diff path; cdf=True the
-    persisted-change-file fast path (Delta CDF analogue) — both must
-    converge the index to full-recompute parity after every epoch."""
+def test_incremental_index_tracks_insert_update_delete(spark, tmp_path):
+    """The index, fed by the exact state diff, converges to
+    full-recompute parity after every epoch."""
     src = TableStore(str(tmp_path / "src"), n_buckets=4)
-    engine = CdcApplyEngine(
-        src, EngineConfig(metrics=False, changefeed_files=cdf)
-    )
+    engine = CdcApplyEngine(src, EngineConfig(metrics=False))
     index = IncrementalDedupIndex(str(tmp_path / "idx"), n_buckets=4)
 
     # ---- epoch 0: initial inserts (planted near-dup 0/1) ----
@@ -121,10 +114,6 @@ def test_incremental_index_tracks_insert_update_delete(spark, tmp_path, cdf):
 
     # idempotent / resumable: re-running with no new source version is a noop
     assert index.update(spark, src)["status"] == "noop"
-    if cdf:
-        # every engine version carried a persisted change file
-        for v in src.versions():
-            assert "changes" in src.manifest(v)
 
 
 def test_update_to_empty_text_replaces_stale_bands(spark, tmp_path):

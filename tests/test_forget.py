@@ -93,7 +93,7 @@ def _pick_keys(spark, store):
 def test_forget_scrubs_live_and_history_keeps_everything_else(
     spark, tmp_path
 ):
-    store, _ = _build(spark, tmp_path, changefeed_files=True)
+    store, _ = _build(spark, tmp_path)
     (lr, lp), (gr, gp) = _pick_keys(spark, store)
     keys = [(lr, lp), (gr, gp)]
     pred = ((F.col("repo") == lr) & (F.col("path") == lp)) | (
@@ -378,22 +378,16 @@ def test_forget_then_agg_view_rebuild_resumes_incremental(spark, tmp_path):
     _assert_parity(spark, src, view)
 
 
-def test_second_forget_hits_rewritten_change_file(spark, tmp_path):
-    """A second forget whose keys hit a change file the FIRST forget
-    already rewrote must not read-and-overwrite the same path (Spark
-    refuses 'Cannot overwrite a path that is also being read from'; other
-    engines would destroy the input). Each rewrite lands on a fresh
-    seq-suffixed path; the old dir is dropped after the manifest swap."""
-    store, _ = _build(spark, tmp_path, changefeed_files=True)
+def test_second_forget_merges_markers_and_stays_idempotent(spark, tmp_path):
+    """A second forget at the same head (its key is already gone from live
+    state, so it commits no new version) merges its keys into the first
+    one's delete-marker set; both keys are physically gone, every retained
+    version still reads, and a third pass over the same keys is a no-op."""
+    store, _ = _build(spark, tmp_path)
     (lr, lp), (gr, gp) = _pick_keys(spark, store)
 
-    out1 = store.forget_keys(spark, keys=[(lr, lp)])
-    assert out1["change_files_rewritten"] >= 1
-    # pick a SECOND key that shares a change file with the first: any
-    # other key of the same fixture appears in the same per-version
-    # change sets, so the rewritten forget_v*_0 files are the read path
-    out2 = store.forget_keys(spark, keys=[(gr, gp)])
-    assert out2["change_files_rewritten"] >= 1
+    store.forget_keys(spark, keys=[(lr, lp)])
+    store.forget_keys(spark, keys=[(gr, gp)])
 
     pred = ((F.col("repo") == lr) & (F.col("path") == lp)) | (
         (F.col("repo") == gr) & (F.col("path") == gp)
@@ -418,17 +412,16 @@ def test_second_forget_hits_rewritten_change_file(spark, tmp_path):
 def test_forget_nonmatching_keys_writes_no_marker(spark, tmp_path):
     """Keys that match nothing live, nothing in retained history, with no
     prior marker: no marker file, no forget_deletes flag — a zero-row
-    redaction must not poison table_changes_cdf ranges or the relaxed
-    change-file fast path forever."""
+    redaction must not poison table_changes_cdf ranges forever."""
     from kp_data_replication_spark.operators.changefeed import (
         table_changes_cdf,
     )
 
-    store, _ = _build(spark, tmp_path, changefeed_files=True)
+    store, _ = _build(spark, tmp_path)
     head = store.current_version()
     out = store.forget_keys(spark, keys=[("no-such-repo", "no/such/path")])
     assert out["live_deleted"] == 0 and out["rows_removed"] == 0
-    assert out["files_rewritten"] == 0 and out["change_files_rewritten"] == 0
+    assert out["files_rewritten"] == 0
     assert store.current_version() == head  # no delete commit either
     assert "forget_deletes" not in store.current_manifest()
     # the retraction feed still serves ranges crossing the no-op

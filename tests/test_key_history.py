@@ -1,6 +1,6 @@
 """Per-key audit trail (changefeed.key_history): lifecycle
-reconstruction, manifest-only skips, the change-file fast branch,
-rebuckets in range, LWW delete rendering, and the CLI."""
+reconstruction, manifest-only skips, rebuckets in range, LWW delete
+rendering, and the CLI."""
 
 from __future__ import annotations
 
@@ -88,21 +88,6 @@ def test_untouched_bucket_versions_cost_zero_reads(spark, tmp_path, monkeypatch)
     assert got == []
     # only the typed-empty-frame read (buckets=[]) is allowed
     assert all(b == [] for b in calls), calls
-
-
-def test_change_file_branch_reads_only_change_files(spark, tmp_path):
-    store = TableStore(str(tmp_path / "t"), n_buckets=4)
-    eng = CdcApplyEngine(store, EngineConfig(metrics=False, changefeed_files=True))
-    _apply(spark, eng, [_env("a", "c", "A1", 0)], 0)
-    _apply(spark, eng, [_env("a", "u", "A2", 10), _env("b", "c", "B1", 11)], 1)
-    _apply(spark, eng, [_env("a", "d", None, 20)], 2)
-
-    df = key_history(spark, store, [("t", "a")])
-    read = {f for f in df.inputFiles()}
-    assert read and all("/changes/" in f for f in read), read
-    got = sorted((int(r["_commit_version"]), r["_change_type"])
-                 for r in df.collect())
-    assert got == [(1, "insert"), (2, "update"), (3, "delete")]
 
 
 def test_rebucket_in_range_is_layout_aware(spark, tmp_path):

@@ -167,45 +167,6 @@ def test_pack_greedy_is_arrow(spark, tmp_path):
     assert count_exchanges(out) == 1
 
 
-def test_change_file_read_is_join_free_and_touches_no_table_data(spark, tmp_path):
-    """The persisted-change-file fast path (Delta CDF analogue) must read
-    ONLY changes/ files — zero table data files, no join anywhere in the
-    plan (the state diff it replaces is a full-outer join): one max_by
-    aggregate is the entire cost."""
-    import os
-
-    from kp_data_replication_spark.operators.changefeed import table_changes
-    from kp_data_replication_spark.sources.table_store import TableStore
-    from kp_data_replication_spark.streaming.apply import CdcApplyEngine, EngineConfig
-
-    d = str(tmp_path / "cl")
-    write_changelog(
-        spark, d,
-        ChangelogSpec(n_keys=120, versions_per_key=2, n_partitions=4, files=2,
-                      dup_every=0),
-    )
-    store = TableStore(str(tmp_path / "t"), n_buckets=8)
-    engine = CdcApplyEngine(
-        store, EngineConfig(metrics=False, changefeed_files=True)
-    )
-    files = sorted(f for f in os.listdir(d) if f.endswith(".parquet"))
-    for epoch, f in enumerate(files):
-        engine.apply_batch(
-            spark.read.option("mergeSchema", "true").parquet(f"{d}/{f}"), epoch
-        )
-
-    ch = table_changes(spark, store, 1, store.current_version(),
-                       use_change_files=True, allow_relaxed=True)
-    from urllib.parse import urlparse
-
-    read = {urlparse(f).path for f in ch.inputFiles()}
-    assert read and all("/changes/" in p for p in read), read
-    s = plan_string(ch)
-    assert "Join" not in s, s  # the diff join is GONE on this path
-    assert_no_row_python(ch)
-    assert count_exchanges(ch) <= 1  # the cross-version max_by aggregate
-
-
 def test_compaction_shuffle_fallback_has_no_broadcast(spark, changelog_dir):
     """Over-budget compaction path: the shuffle join-back must not
     plan a broadcast (that is exactly the driver-OOM it avoids); both join

@@ -169,3 +169,32 @@ def test_partition_count_mismatch_replay(spark, tmp_path):
     s16 = TableStore(str(tmp_path / "t16"))
     assert s5.n_buckets == 5 and s16.n_buckets == 16
 
+
+
+def test_key_spanning_two_partitions_fails_before_commit(spark, tmp_path):
+    """One (repo, path) with events in log partitions 0 and 1 breaks the
+    key->partition affinity contract: per-partition watermarks could let
+    an older image overwrite a newer row, so the batch must raise before
+    anything is committed."""
+    from pyspark.sql import Row
+
+    from kp_data_replication_spark.schema import CHANGELOG_SCHEMA
+
+    def env(partition, lsn, path, content):
+        img = Row(repo="r", path=path, commit="c0", lang="en", content=content)
+        return Row(partition=partition, lsn=lsn, op="c", before=None,
+                   after=img, ts_ms=None, headers=None, source_topic="repos")
+
+    store = TableStore(str(tmp_path / "t"), n_buckets=4)
+    engine = CdcApplyEngine(store, FAST)
+    engine.apply_batch(
+        spark.createDataFrame([env(0, 0, "ok", "v0")], CHANGELOG_SCHEMA), 0
+    )
+    head = store.current_version()
+    split = spark.createDataFrame(
+        [env(0, 1, "split", "old"), env(1, 1, "split", "new")],
+        CHANGELOG_SCHEMA,
+    )
+    with pytest.raises(ValueError, match="affinity"):
+        engine.apply_batch(split, 1)
+    assert store.current_version() == head

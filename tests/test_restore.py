@@ -233,10 +233,7 @@ def test_restore_compensating_diff_keeps_incremental_index_consistent(
 ):
     """A derived incremental index tailing the table's changefeed sees a
     restore as ONE compensating change set and converges to full-recompute
-    parity over the RESTORED state — no rebuild, no special-casing. Runs
-    with persisted change files on, so this also proves the restore
-    version (which writes no change file) falls back to the exact diff
-    inside a mixed range."""
+    parity over the RESTORED state — no rebuild, no special-casing."""
     from test_dedup_incremental import (
         BASE,
         _env,
@@ -251,9 +248,7 @@ def test_restore_compensating_diff_keeps_incremental_index_consistent(
     from kp_data_replication_spark.schema import CHANGELOG_SCHEMA
 
     src = TableStore(str(tmp_path / "src"), n_buckets=4)
-    engine = CdcApplyEngine(
-        src, EngineConfig(metrics=False, changefeed_files=True)
-    )
+    engine = CdcApplyEngine(src, EngineConfig(metrics=False))
     index = IncrementalDedupIndex(str(tmp_path / "idx"), n_buckets=4)
 
     batches = [

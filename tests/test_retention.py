@@ -90,13 +90,6 @@ def test_expire_emits_changefeed_deletes_and_prunes(spark, tmp_path):
     got = {(r["path"], r["_change_type"]) for r in diff.collect()}
     assert got == {(f"k{i}", "delete") for i in range(20)}
 
-    # and the change-file fast path serves the same deletes O(batch)
-    fast = table_changes(
-        spark, store, v0, store.current_version(),
-        use_change_files=True, allow_relaxed=True,
-    )
-    assert {(r["path"], r["_change_type"]) for r in fast.collect()} == got
-
 
 def test_expire_noop_and_fencing(spark, tmp_path):
     rows = [_ev(i, "c", i * 100, i) for i in range(10)]
@@ -200,7 +193,7 @@ def test_streaming_retention_hook_expires_behind_window(spark, tmp_path):
     )
     q.awaitTermination()
     assert _paths(spark, store) == {f"k{i}" for i in range(5, 10)}
-    # the expiry is a separate maintenance version with a change file
+    # the expiry is a separate maintenance version whose diff is all deletes
     diff = table_changes(spark, store, 1, store.current_version())
     assert {r["_change_type"] for r in diff.collect()} == {"delete"}
 

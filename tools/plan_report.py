@@ -130,40 +130,15 @@ def main() -> None:
         formatted(ch),
     ))
 
-    # change-file fast path: a store whose engine persists change sets
-    sdir2 = tempfile.mkdtemp(prefix="plans_store_cdf_")
-    store2 = TableStore(os.path.join(sdir2, "t"), n_buckets=8)
-    engine2 = CdcApplyEngine(
-        store2, EngineConfig(metrics=False, changefeed_files=True)
-    )
-    engine2.apply_batch(spark.read.parquet(*[f"{d}/{x}" for x in files[:half]]), 0)
-    engine2.apply_batch(
-        spark.read.option("mergeSchema", "true")
-        .parquet(*[f"{d}/{x}" for x in files[half:]])
-        .filter(F.col("lsn") % 5 == 0),
-        1,
-    )
-    ch_fast = table_changes(spark, store2, 1, 2, use_change_files=True, allow_relaxed=True)
-    sections.append((
-        "Changefeed: persisted change-file fast path (Delta CDF analogue)",
-        "With EngineConfig.changefeed_files the commit persists each "
-        "version's compacted change set; the incremental read then scans "
-        "ONLY changes/ files — the state-diff full-outer join is GONE "
-        "(no Join node below), the single exchange is the cross-version "
-        "newest-change-per-key aggregate. This is the O(batch) feed the "
-        "incremental dedup index consumes (operators/dedup_incremental.py).",
-        formatted(ch_fast),
-    ))
-
     # incremental dedup index: per-epoch candidate-pair probe
     from kp_data_replication_spark.operators.dedup_incremental import (
         IncrementalDedupIndex,
     )
 
-    idx = IncrementalDedupIndex(os.path.join(sdir2, "idx"), n_buckets=8)
-    idx.update(spark, store2)
+    idx = IncrementalDedupIndex(os.path.join(sdir, "idx"), n_buckets=8)
+    idx.update(spark, store)
     changed = idx._changed_bands(
-        ch_fast.filter(F.col("_change_type") != "delete")
+        ch.filter(F.col("_change_type") != "delete")
         .select("repo", "path", "content"),
         "content",
     )
@@ -193,7 +168,7 @@ def main() -> None:
             ]
         ).alias("embedding"),
     )
-    src3 = TableStore(os.path.join(sdir2, "annsrc"), n_buckets=4)
+    src3 = TableStore(os.path.join(sdir, "annsrc"), n_buckets=4)
     CdcApplyEngine(src3, EngineConfig(metrics=False)).apply_batch(
         emb.select(
             F.pmod(F.col("path").cast("long"), F.lit(2)).cast("int").alias("partition"),
@@ -209,7 +184,7 @@ def main() -> None:
         ),
         0,
     )
-    ann = IncrementalAnnIndex(os.path.join(sdir2, "annidx"), n_buckets=4)
+    ann = IncrementalAnnIndex(os.path.join(sdir, "annidx"), n_buckets=4)
     ann.set_centroids(
         emb.limit(8).select(
             F.col("path").cast("int").alias("cell"),
