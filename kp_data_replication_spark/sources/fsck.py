@@ -54,6 +54,8 @@ def fsck(store, spark=None, deep: bool = False) -> dict[str, Any]:
           versions, never move backwards for any (group, partition)
       C1  every registered consumer's pinned version still has a manifest
           (vacuum's min-floor contract held)
+      W1  a pending write-audit-publish marker names the version right
+          after the head, and that version's manifest exists
       O1  (warning) crash orphans: files under data/ no retained manifest
           references — legal, awaiting vacuum
 
@@ -200,6 +202,18 @@ def fsck(store, spark=None, deep: bool = False) -> dict[str, Any]:
             warnings.append(
                 f"C1: consumer {g} is {head - v} versions behind head"
             )
+
+    # W1 — staged (WAP) marker: publish_staged would refuse a marker that
+    # no longer names head+1 (its version was published or overwritten)
+    sv = store.staged_version()
+    if sv is not None and sv != head + 1:
+        errors.append(
+            f"W1: staged marker names v{sv}, not v{head + 1} (head is v{head})"
+        )
+    elif sv is not None and not os.path.exists(
+        os.path.join(mdir, f"v{sv}.json")
+    ):
+        errors.append(f"W1: staged marker names v{sv} whose manifest is missing")
 
     # O1 — crash orphans (warning only; vacuum's job)
     data_root = os.path.join(store.root, "data")

@@ -80,22 +80,13 @@ def bucket_expr(n_buckets: int, key_cols: list[str] | None = None) -> F.Column:
     return F.pmod(F.hash(*[F.col(c) for c in key_cols]), F.lit(n_buckets)).cast("int")
 
 
-def _stamp_commit_ts(manifest: dict, floor_ms: int | None = None) -> None:
-    """Wall-clock commit stamp (Iceberg snapshot timestamp-millis
-    analogue) enabling AS-OF-TIMESTAMP time travel. Strictly monotone per
-    table: two commits landing in the same millisecond still order by
-    version, so version_as_of(ts) is well-defined and agrees with commit
-    order. The floor is the previous manifest's stamp — callers whose
-    manifest inherits it via **prev already carry it; commit() passes it
-    explicitly. Metadata only: the stamp never reaches data files or
-    content hashes, so replay determinism is untouched."""
-    import time as _time
+# manifest keys that describe how ONE version came about; a successor
+# manifest never inherits them (see TableStore._successor)
+_VERSION_FLAGS = ("row_preserving", "changefeed_skip", "forget_deletes", "restored_from")
 
-    prev_ts = manifest.get("committed_at_ms") if floor_ms is None else floor_ms
-    now = int(_time.time() * 1000)
-    manifest["committed_at_ms"] = (
-        now if prev_ts is None else max(now, prev_ts + 1)
-    )
+
+def _untimed(_phase: str) -> None:
+    """Phase callback for writers that keep no phase timings."""
 
 
 def _locked(fn):
@@ -536,7 +527,8 @@ class TableStore:
 
     def _write_lock(self):
         """Exclusive advisory lock serializing all version-advancing ops
-        (commit / rewrite / rebucket / purge / vacuum) on this table.
+        (commit / publish / abort / restore / rewrite / rebucket / purge /
+        forget / vacuum; clone holds the TARGET's lock) on this table.
 
         Closes the silent-clobber race between concurrent writers: both
         would compute ``version = current + 1``, overwrite each other's
@@ -780,21 +772,20 @@ class TableStore:
     def _refresh_stats(
         self,
         manifest: dict,
-        prev: dict,
         new_relpaths: list[str],
-        schema_json: dict,
         spark: SparkSession | None = None,
     ) -> None:
-        """Carry zonemaps forward by relpath (data files are immutable, so
-        an inherited entry can never go stale), harvest the new files,
-        drop entries for files no longer referenced."""
-        stats = dict(prev.get("stats", {}))
+        """Keep the zonemaps ``manifest`` inherited, keyed by relpath (data
+        files are immutable, so an inherited entry can never go stale),
+        harvest the new files, drop entries for files no longer
+        referenced."""
+        stats = dict(manifest.get("stats", {}))
         if self.collect_stats and new_relpaths:
             stats.update(
                 collect_file_stats(
                     self.root,
                     new_relpaths,
-                    stat_columns(T.StructType.fromJson(schema_json)),
+                    stat_columns(T.StructType.fromJson(manifest["schema"])),
                     bloom_cols=self.bloom_cols,
                     spark=spark,
                 )
@@ -968,7 +959,8 @@ class TableStore:
         pointer does not move — audit with :meth:`read_staged`, then
         :meth:`publish_staged` (one pointer swap exposes the EXACT audited
         bytes) or :meth:`abort_staged`. At most one staged version exists;
-        commit and vacuum refuse while it is pending.
+        every version-advancing method (and vacuum) refuses while it is
+        pending.
 
         ``merged_dirty`` must contain BUCKET_COL; only rows of
         ``dirty_buckets`` may be present. ``lineage`` is plain rows, written
@@ -1012,25 +1004,7 @@ class TableStore:
             raise ValueError("retain is CoW-only (a MoR delta appends whole)")
         if epoch <= self.writer_epoch(writer_id):
             return self.current_version()  # fenced: this writer already committed it
-        if self.staged_version() is not None:
-            # a pending WAP version owns current+1; committing over it
-            # would silently overwrite the audited-but-unpublished data
-            raise ValueError(
-                "a staged (write-audit-publish) version is pending: "
-                "publish_staged() or abort_staged() before committing"
-            )
-        if (
-            expected_version is not None
-            and self.current_version() != expected_version
-        ):
-            # optimistic concurrency: the merge was computed against a
-            # version that is no longer current — committing it would
-            # silently drop the intervening writer's rows
-            raise ConcurrentWriteError(
-                f"table advanced to v{self.current_version()} while this "
-                f"writer merged against v{expected_version}; recompute the "
-                "merge against current state and retry"
-            )
+        version = self._next_version(expected_version)
 
         import time as _time
 
@@ -1043,20 +1017,19 @@ class TableStore:
             _phases[name] = _phases.get(name, 0.0) + (now - _pt)
             _pt = now
 
-        os.makedirs(os.path.join(self.root, "manifests"), exist_ok=True)
-        prev = self.current_manifest()
-        version = self.current_version() + 1
-        buckets_map: dict[str, list[str]] = dict(prev["buckets"]) if prev else {}
-        bucket_bytes: dict[str, int] = (
-            dict(prev.get("bucket_bytes", {})) if prev else {}
+        prev = self.current_manifest() or {
+            "n_buckets": self._n_buckets, "buckets": {}, "bucket_bytes": {},
+        }
+        lineage_rel = f"lineage/v{version}.parquet"
+        manifest = self._successor(
+            prev,
+            version=version,
+            epoch=epoch,
+            writers={**prev.get("writers", {}), writer_id: epoch},
+            schema=row_schema.jsonValue(),
+            lineage=lineage_rel,
         )
-
-        epoch_rel = f"data/v{version}"
-        epoch_dir = os.path.join(self.root, epoch_rel)
-        mor_counts: dict[str, int] = dict(prev.get("mor", {})) if prev else {}
-        new_stats: dict[str, dict] = dict(prev.get("stats", {})) if prev else {}
         if merged_dirty is not None and dirty_buckets:
-            shutil.rmtree(epoch_dir, ignore_errors=True)  # idempotent re-delivery
             # cluster rows by bucket before the dynamic-partition write: one
             # task (and one file) per dirty bucket instead of
             # n_tasks x n_buckets small files; at real scale Iceberg's write
@@ -1086,81 +1059,12 @@ class TableStore:
                     len(dirty_buckets), F.col(BUCKET_COL)
                 )
             _phase("plan")
-            (
-                to_write.write.mode("overwrite")
-                .partitionBy(BUCKET_COL)
-                .parquet(epoch_dir)
+            self._write_buckets(
+                to_write, manifest, dirty_buckets,
+                append=mor, retain=retain, phase=_phase,
             )
-            _phase("write")
-            written: dict[str, list[str]] = {str(b): [] for b in dirty_buckets}
-            for d in os.listdir(epoch_dir):
-                if not d.startswith(f"{BUCKET_COL}="):
-                    continue
-                b = d.split("=", 1)[1]
-                files = [
-                    f"{epoch_rel}/{d}/{f}"
-                    for f in os.listdir(os.path.join(epoch_dir, d))
-                    if f.endswith(".parquet")
-                ]
-                written[b] = files
-            # per-bucket byte sizes ride the manifest (Iceberg file-size
-            # metadata analogue): stat only THIS epoch's new files, so the
-            # auto-rebucket probe later is pure manifest metadata — no
-            # filesystem walk over the whole table per epoch
-            new_bytes = {
-                b: sum(
-                    os.path.getsize(os.path.join(self.root, f)) for f in fs
-                )
-                for b, fs in written.items()
-            }
-            _phase("list")
-            if self.collect_stats:
-                new_stats.update(
-                    collect_file_stats(
-                        self.root,
-                        [f for fs in written.values() for f in fs],
-                        stat_columns(row_schema),
-                        bloom_cols=self.bloom_cols,
-                        spark=merged_dirty.sparkSession,
-                    )
-                )
-                _phase("stats")
-            if mor:
-                # delta layer: APPEND to each dirty bucket's file list
-                for b, fs in written.items():
-                    buckets_map[b] = list(buckets_map.get(b, [])) + fs
-                    bucket_bytes[b] = bucket_bytes.get(b, 0) + new_bytes[b]
-                    mor_counts[b] = mor_counts.get(b, 0) + 1
-            else:
-                buckets_map.update(written)
-                bucket_bytes.update(new_bytes)
-                # a copy-on-write replace subsumes any delta layers the
-                # bucket had (the merged output was computed over the
-                # resolved read)
-                for b in written:
-                    mor_counts.pop(b, None)
-                if retain:
-                    # file-level partial rewrite (row expiry's zonemap
-                    # path): the caller rewrote only the bucket's
-                    # MAY-MATCH files and carries the proven-clean ones by
-                    # reference — data files are immutable and vacuum
-                    # walks manifests for live refs, so an old-version
-                    # path stays valid exactly like an untouched bucket's
-                    for b, fs in retain.items():
-                        b = str(b)
-                        if b not in written:
-                            raise ValueError(
-                                f"retain for bucket {b} which is not dirty"
-                            )
-                        buckets_map[b] = list(buckets_map[b]) + list(fs)
-                        bucket_bytes[b] = bucket_bytes.get(b, 0) + sum(
-                            os.path.getsize(os.path.join(self.root, f))
-                            for f in fs
-                        )
-
         _phase("retain")
 
-        lineage_rel = f"lineage/v{version}.parquet"
         lineage_dir = os.path.join(self.root, lineage_rel)
         shutil.rmtree(lineage_dir, ignore_errors=True)
         import pyarrow as pa
@@ -1185,63 +1089,174 @@ class TableStore:
         pq.write_table(tbl, os.path.join(lineage_dir, "part-0.parquet"))
         _phase("lineage")
 
-        writers = dict(prev.get("writers", {})) if prev else {}
-        writers[writer_id] = epoch
-        manifest = {
-            "version": version,
-            "epoch": epoch,
-            "writers": writers,
-            "n_buckets": prev["n_buckets"] if prev else self._n_buckets,
-            "schema": row_schema.jsonValue(),
-            "buckets": buckets_map,
-            "bucket_bytes": bucket_bytes,
-            "lineage": lineage_rel,
-        }
-        if mor_counts:
-            manifest["mor"] = mor_counts
-        live = {p for fs in buckets_map.values() for p in fs}
-        new_stats = {p: s for p, s in new_stats.items() if p in live}
-        if new_stats:
-            manifest["stats"] = new_stats
-        mpath = os.path.join(self.root, "manifests", f"v{version}.json")
-        _stamp_commit_ts(
-            manifest, floor_ms=(prev or {}).get("committed_at_ms")
+        self._publish(
+            manifest, expected_version=version - 1, stage=not publish,
+            phase=_phase,
         )
+        self.last_commit_phases = {k: round(v, 6) for k, v in _phases.items()}
+        for k, v in _phases.items():
+            self.commit_phase_totals[k] = self.commit_phase_totals.get(k, 0.0) + v
+        return version
+
+    # ---------- the one publish path ----------
+    def _expect(self, expected_version: int | None) -> int:
+        """The current version, after the optimistic-concurrency check."""
+        current = self.current_version()
+        if expected_version is not None and current != expected_version:
+            # the write was computed against a version that is no longer
+            # current — publishing it would silently drop the intervening
+            # writer's rows
+            raise ConcurrentWriteError(
+                f"table advanced to v{current} while this writer worked "
+                f"against v{expected_version}; recompute against current "
+                "state and retry"
+            )
+        return current
+
+    def _next_version(self, expected_version: int | None = None) -> int:
+        """The version a writer is about to create. Every version-advancing
+        method calls this BEFORE it touches ``data/v{n}``: a staged WAP
+        version owns current+1 (its data directory IS ``data/v{n}``), so
+        every writer refuses while one is pending; ``expected_version`` is
+        the optimistic-concurrency check."""
+        if self.staged_version() is not None:
+            raise ValueError(
+                "a staged (write-audit-publish) version is pending: "
+                "publish_staged() or abort_staged() first"
+            )
+        return self._expect(expected_version) + 1
+
+    @staticmethod
+    def _successor(prev: dict, **fields) -> dict:
+        """The next manifest: ``prev`` without its per-version flags
+        (:data:`_VERSION_FLAGS`), with ``fields`` applied — a field set to
+        None removes the key."""
+        out = {k: v for k, v in prev.items() if k not in _VERSION_FLAGS}
+        for k, v in fields.items():
+            if v is None:
+                out.pop(k, None)
+            else:
+                out[k] = v
+        return out
+
+    def _write_manifest(self, version: int, manifest: dict) -> None:
+        """Atomic (tmp + os.replace) write of ``manifests/v{version}.json``."""
+        mpath = os.path.join(self.root, "manifests", f"v{version}.json")
+        os.makedirs(os.path.dirname(mpath), exist_ok=True)
         with open(mpath + ".tmp", "w") as f:
             json.dump(manifest, f)
         os.replace(mpath + ".tmp", mpath)
-        _phase("manifest")
 
-        def _flush_phases() -> None:
-            self.last_commit_phases = {
-                k: round(v, 6) for k, v in _phases.items()
-            }
-            for k, v in _phases.items():
-                self.commit_phase_totals[k] = (
-                    self.commit_phase_totals.get(k, 0.0) + v
-                )
+    def _publish(
+        self,
+        manifest: dict,
+        *,
+        expected_version: int,
+        stage: bool = False,
+        phase=_untimed,
+    ) -> None:
+        """Make ``manifest`` (version ``expected_version + 1``) the head —
+        or, with ``stage``, the pending WAP version. The one place a
+        version becomes visible; the caller holds the write lock (flock is
+        not re-entrant across file descriptors, so this never takes it).
 
-        if not publish:
-            # write-audit-publish: everything is durable (data + manifest)
-            # but the pointer does NOT move — readers stay on the previous
-            # version; the auditor reads the staged version explicitly
-            # (read_staged) and then publish_staged() swaps the pointer to
-            # the EXACT audited bytes, or abort_staged() discards them
+        Stamps ``committed_at_ms`` (Iceberg snapshot timestamp-millis
+        analogue, for AS-OF-TIMESTAMP time travel): wall clock, floored at
+        the head's stamp + 1, so stamps are strictly monotone per table and
+        ``version_as_of`` agrees with commit order even for
+        same-millisecond bursts. Metadata only: the stamp never reaches
+        data files or content hashes, so replay determinism is untouched.
+        """
+        import time as _time
+
+        current = self._expect(expected_version)
+        floor = (self.manifest(current) or {}).get("committed_at_ms")
+        now = int(_time.time() * 1000)
+        manifest["committed_at_ms"] = now if floor is None else max(now, floor + 1)
+        version = manifest["version"]
+        self._write_manifest(version, manifest)
+        phase("manifest")
+        if stage:
+            # write-audit-publish: data + manifest are durable but the
+            # pointer does NOT move — readers stay on the previous version;
+            # the auditor reads the staged version (read_staged), then
+            # publish_staged() swaps the pointer to the EXACT audited bytes
+            # or abort_staged() discards them
             with open(self._staged_path + ".tmp", "w") as f:
-                json.dump({"version": version, "writer": writer_id,
-                           "epoch": epoch}, f)
+                json.dump({"version": version}, f)
             os.replace(self._staged_path + ".tmp", self._staged_path)
-            _phase("swap")
-            _flush_phases()
-            return version
+        else:
+            # the transaction point: everything before this is invisible
+            with open(self.pointer_path + ".tmp", "w") as f:
+                json.dump({"version": version}, f)
+            os.replace(self.pointer_path + ".tmp", self.pointer_path)
+        phase("swap")
 
-        # the transaction point: everything before this line is invisible
-        with open(self.pointer_path + ".tmp", "w") as f:
-            json.dump({"version": version}, f)
-        os.replace(self.pointer_path + ".tmp", self.pointer_path)
-        _phase("swap")
-        _flush_phases()
-        return version
+    def _write_buckets(
+        self,
+        df: DataFrame,
+        manifest: dict,
+        buckets: list[int] | range,
+        *,
+        append: bool = False,
+        retain: dict[int, list[str]] | None = None,
+        phase=_untimed,
+    ) -> None:
+        """Write ``df`` (BUCKET_COL included, already partitioned by the
+        caller — that choice fixes the file layout) as ``data/v{n}`` of
+        ``manifest``, and point each written bucket at its new files:
+        replacing the bucket's list (copy-on-write; the merged output
+        subsumes any merge-on-read layers, so the bucket's ``mor`` entry
+        goes) or, with ``append``, adding them as one more delta layer.
+        ``retain`` carries a replaced bucket's proven-clean old files by
+        reference (row expiry's file-level partial rewrite — data files are
+        immutable and vacuum walks manifests for live refs, so an
+        old-version path stays valid like an untouched bucket's). The written
+        buckets' byte sizes and the zonemaps are recomputed."""
+        rel = f"data/v{manifest['version']}"
+        out_dir = os.path.join(self.root, rel)
+        shutil.rmtree(out_dir, ignore_errors=True)  # idempotent re-delivery
+        df.write.mode("overwrite").partitionBy(BUCKET_COL).parquet(out_dir)
+        phase("write")
+        written: dict[str, list[str]] = {str(b): [] for b in buckets}
+        for d in os.listdir(out_dir) if os.path.isdir(out_dir) else []:
+            if d.startswith(f"{BUCKET_COL}="):
+                written[d.split("=", 1)[1]] = sorted(
+                    f"{rel}/{d}/{f}"
+                    for f in os.listdir(os.path.join(out_dir, d))
+                    if f.endswith(".parquet")
+                )
+        kept = {str(b): list(fs) for b, fs in (retain or {}).items()}
+        stray = sorted(kept.keys() - written.keys())
+        if stray:
+            raise ValueError(f"retain for bucket {stray[0]} which is not dirty")
+        files = dict(manifest.get("buckets", {}))
+        mor = dict(manifest.get("mor", {}))
+        sizes = dict(manifest.get("bucket_bytes", {}))
+        for b, fs in written.items():
+            if append:
+                files[b] = files.get(b, []) + fs
+                mor[b] = mor.get(b, 0) + 1
+            else:
+                files[b] = fs + kept.get(b, [])
+                mor.pop(b, None)
+            # per-bucket byte sizes ride the manifest (Iceberg file-size
+            # metadata analogue), so live_bytes() and the auto-rebucket
+            # probe are pure manifest metadata
+            sizes[b] = sum(
+                os.path.getsize(os.path.join(self.root, f)) for f in files[b]
+            )
+        manifest.update(buckets=files, bucket_bytes=sizes)
+        if mor:
+            manifest["mor"] = mor
+        else:
+            manifest.pop("mor", None)
+        phase("list")
+        self._refresh_stats(
+            manifest, [f for fs in written.values() for f in fs],
+            spark=df.sparkSession,
+        )
+        phase("stats")
 
     # ---------- write-audit-publish (Iceberg WAP analogue) ----------
     @property
@@ -1250,7 +1265,8 @@ class TableStore:
 
     def staged_version(self) -> int | None:
         """The pending WAP version, or None. At most one may be staged —
-        commit/vacuum refuse while it exists (it owns current+1)."""
+        every version-advancing method (and vacuum) refuses while it
+        exists (it owns current+1)."""
         try:
             with open(self._staged_path) as f:
                 return int(json.load(f)["version"])
@@ -1270,13 +1286,13 @@ class TableStore:
     def publish_staged(self) -> int:
         """Atomically expose the staged version — the audited bytes ARE
         the published bytes (no recompute between audit and publish,
-        the WAP property). One pointer swap, then the marker clears."""
+        the WAP property). One pointer swap, then the marker clears. A
+        marker that no longer names the version after the head (see fsck
+        W1) is refused with :class:`ConcurrentWriteError`."""
         sv = self.staged_version()
         if sv is None:
             raise ValueError("no staged version")
-        with open(self.pointer_path + ".tmp", "w") as f:
-            json.dump({"version": sv}, f)
-        os.replace(self.pointer_path + ".tmp", self.pointer_path)
+        self._publish(self.manifest(sv), expected_version=sv - 1)
         os.remove(self._staged_path)
         return sv
 
@@ -1285,10 +1301,15 @@ class TableStore:
         """Discard the staged version: drop its manifest and data
         directory (nothing references them — readers never saw the
         version). The writer map never activated either, so the SAME
-        (writer, epoch) can legitimately re-commit a corrected batch."""
+        (writer, epoch) can legitimately re-commit a corrected batch.
+        A stale marker at or below the head only loses the marker: that
+        manifest and data belong to a published version."""
         sv = self.staged_version()
         if sv is None:
             raise ValueError("no staged version")
+        if sv <= self.current_version():
+            os.remove(self._staged_path)
+            return {"aborted_version": sv}
         mpath = os.path.join(self.root, "manifests", f"v{sv}.json")
         if os.path.exists(mpath):
             os.remove(mpath)
@@ -1654,15 +1675,8 @@ class TableStore:
             manifest["stats"] = {
                 _abs(p): s for p, s in m["stats"].items()
             }
-        os.makedirs(os.path.join(target_root, "manifests"), exist_ok=True)
-        mpath = os.path.join(target_root, "manifests", "v1.json")
-        _stamp_commit_ts(manifest)
-        with open(mpath + ".tmp", "w") as f:
-            json.dump(manifest, f)
-        os.replace(mpath + ".tmp", mpath)
-        with open(target.pointer_path + ".tmp", "w") as f:
-            json.dump({"version": 1}, f)
-        os.replace(target.pointer_path + ".tmp", target.pointer_path)
+        with target._write_lock():
+            target._publish(manifest, expected_version=0)
         if pin:
             self.record_consumer(f"clone:{os.path.abspath(target_root)}", src_version)
         return target
@@ -1672,7 +1686,7 @@ class TableStore:
         """AS-OF-TIMESTAMP resolution: the newest committed version whose
         commit stamp is <= ts_ms (Iceberg snapshot-at-timestamp /
         Delta timestampAsOf semantics). Stamps are strictly monotone per
-        table (see _stamp_commit_ts) so the answer is unambiguous even for
+        table (see _publish) so the answer is unambiguous even for
         same-millisecond commit bursts. Raises if the timestamp predates
         the oldest retained version — after vacuum, older history is gone
         and silently returning a later state would be a lie.
@@ -1740,11 +1754,7 @@ class TableStore:
             )
         if to_version == current:
             return current  # no-op, Delta-compatible
-        if self.staged_version() is not None:
-            raise ValueError(
-                "a staged (write-audit-publish) version is pending: "
-                "publish_staged() or abort_staged() before restoring"
-            )
+        version = self._next_version()
         try:
             target = self.manifest(to_version)
         except FileNotFoundError:
@@ -1754,34 +1764,18 @@ class TableStore:
                 f"version {to_version} was expired by vacuum; pick from "
                 f"{self.versions()}"
             )
-        head = self.current_manifest()
-        basis = target if rewind else head
-        version = current + 1
-        manifest = {
-            "version": version,
-            "epoch": basis["epoch"],
-            "writers": dict(basis.get("writers", {})),
-            "n_buckets": target["n_buckets"],
-            "schema": target["schema"],
-            "buckets": dict(target["buckets"]),
-            "bucket_bytes": dict(target.get("bucket_bytes", {})),
-            "lineage": basis["lineage"],
-            "restored_from": to_version,
-        }
-        if target.get("mor"):
-            manifest["mor"] = dict(target["mor"])
-        if target.get("stats"):
-            manifest["stats"] = dict(target["stats"])
-        _stamp_commit_ts(manifest, floor_ms=head.get("committed_at_ms"))
-        man_dir = os.path.join(self.root, "manifests")
-        os.makedirs(man_dir, exist_ok=True)
-        mpath = os.path.join(man_dir, f"v{version}.json")
-        with open(mpath + ".tmp", "w") as f:
-            json.dump(manifest, f)
-        os.replace(mpath + ".tmp", mpath)
-        with open(self.pointer_path + ".tmp", "w") as f:
-            json.dump({"version": version}, f)
-        os.replace(self.pointer_path + ".tmp", self.pointer_path)
+        basis = target if rewind else self.current_manifest()
+        self._publish(
+            self._successor(
+                target,
+                version=version,
+                epoch=basis["epoch"],
+                writers=dict(basis.get("writers", {})),
+                lineage=basis.get("lineage"),
+                restored_from=to_version,
+            ),
+            expected_version=current,
+        )
         return version
 
     @_locked
@@ -1857,9 +1851,8 @@ class TableStore:
         per task out (at real scale Iceberg's target-file-size splitting
         takes over). The ntile window sorts within each bucket — the same
         in-task sort ``sort_keys`` already pays, plus a slice exchange.
-        Same single-maintainer caveat as :meth:`vacuum`: don't run
-        concurrently with a writer's commit window. Returns
-        ``{"rewritten_buckets": [...], "files_before": n, "version": v}``.
+        Returns ``{"rewritten_buckets": [...], "files_before": n,
+        "version": v}``.
         """
         m = self.current_manifest()
         if m is None:
@@ -1879,10 +1872,7 @@ class TableStore:
             }
         sel = sorted(fat)
         files_before = sum(len(v) for v in fat.values())
-        version = self.current_version() + 1
-        epoch_rel = f"data/v{version}"
-        epoch_dir = os.path.join(self.root, epoch_rel)
-        shutil.rmtree(epoch_dir, ignore_errors=True)
+        version = self._next_version()
         # include_deleted: a physical rewrite must carry LWW tombstones
         # forward — dropping them would silently re-open the resurrection
         # window the stamps exist to close
@@ -1959,63 +1949,16 @@ class TableStore:
                 # in-task sort only: the bucket shuffle above already
                 # placed each bucket in one task, so this adds no exchange
                 df = df.sortWithinPartitions(*order)
-        (
-            df
-            .write.mode("overwrite")
-            .partitionBy(BUCKET_COL)
-            .parquet(epoch_dir)
-        )
-        buckets_map = dict(m["buckets"])
-        bucket_bytes = dict(m.get("bucket_bytes", {}))
-        for b in sel:
-            d = os.path.join(epoch_dir, f"{BUCKET_COL}={b}")
-            buckets_map[str(b)] = sorted(
-                f"{epoch_rel}/{BUCKET_COL}={b}/{f}"
-                for f in (os.listdir(d) if os.path.isdir(d) else [])
-                if f.endswith(".parquet")
-            )
-            bucket_bytes[str(b)] = sum(
-                os.path.getsize(os.path.join(self.root, f))
-                for f in buckets_map[str(b)]
-            )
-        manifest = {
-            **m, "version": version, "buckets": buckets_map,
-            "bucket_bytes": bucket_bytes,
-            # physical-only rewrite: state(v) == state(v-1) row-for-row,
-            # tombstones included. Incremental readers narrow their diff
-            # range across this version (changefeed.narrow_versions) — no
-            # data files opened to learn the diff is empty.
-            "row_preserving": True,
-        }
-        manifest.pop("changefeed_skip", None)  # never inherit a purge's flag
-        manifest.pop("forget_deletes", None)  # nor a redaction's markers
-        manifest.pop("restored_from", None)
-        self._refresh_stats(
-            manifest,
-            m,
-            [f for b in sel for f in buckets_map[str(b)]],
-            m["schema"],
-            spark=spark,
-        )
-        # a rewritten bucket's merge-on-read layers are FOLDED into its new
-        # base files (read_state resolved them; the resolution columns are
-        # file-only and never written back)
-        if mor_map:
-            remaining = {
-                b: n for b, n in mor_map.items() if int(b) not in fat
-            }
-            if remaining:
-                manifest["mor"] = remaining
-            else:
-                manifest.pop("mor", None)
-        mpath = os.path.join(self.root, "manifests", f"v{version}.json")
-        _stamp_commit_ts(manifest)
-        with open(mpath + ".tmp", "w") as f:
-            json.dump(manifest, f)
-        os.replace(mpath + ".tmp", mpath)
-        with open(self.pointer_path + ".tmp", "w") as f:
-            json.dump({"version": version}, f)
-        os.replace(self.pointer_path + ".tmp", self.pointer_path)
+        # physical-only rewrite: state(v) == state(v-1) row-for-row,
+        # tombstones included. Incremental readers narrow their diff range
+        # across this version (changefeed.narrow_versions) — no data files
+        # opened to learn the diff is empty. A rewritten bucket's
+        # merge-on-read layers are FOLDED into its new base files
+        # (read_state resolved them; the resolution columns are file-only
+        # and never written back).
+        manifest = self._successor(m, version=version, row_preserving=True)
+        self._write_buckets(df, manifest, sel)
+        self._publish(manifest, expected_version=version - 1)
         return {
             "rewritten_buckets": sel,
             "files_before": files_before,
@@ -2061,7 +2004,7 @@ class TableStore:
         lineage are untouched, so writers resume seamlessly — the engine
         reads ``n_buckets`` from the manifest on every batch. Readers of
         older versions still see the old layout (each manifest carries its
-        own bucket map). Same single-maintainer caveat as :meth:`vacuum`.
+        own bucket map).
 
         ``key_cols``: the hash key of the NEW layout — default the CDC key
         (repo, path); derived tables bucketed by another key (e.g. the agg
@@ -2074,66 +2017,22 @@ class TableStore:
             return {"version": 0, "n_buckets": new_n_buckets}
         if new_n_buckets == m["n_buckets"]:
             return {"version": self.current_version(), "n_buckets": new_n_buckets}
-        version = self.current_version() + 1
-        epoch_rel = f"data/v{version}"
-        epoch_dir = os.path.join(self.root, epoch_rel)
-        shutil.rmtree(epoch_dir, ignore_errors=True)
+        version = self._next_version()
         df = self.read_state(spark, include_deleted=True).withColumn(
             BUCKET_COL, bucket_expr(new_n_buckets, key_cols)
         )
-        (
-            df.repartition(new_n_buckets, F.col(BUCKET_COL))
-            .write.mode("overwrite")
-            .partitionBy(BUCKET_COL)
-            .parquet(epoch_dir)
+        # layout-only change (see rewrite_buckets): readers narrow across
+        # it instead of paying the cross-layout full-table diff; the full
+        # rewrite folds every delta layer
+        manifest = self._successor(
+            m, version=version, n_buckets=new_n_buckets, buckets={},
+            bucket_bytes={}, mor=None, row_preserving=True,
         )
-        buckets_map: dict[str, list[str]] = {
-            str(b): [] for b in range(new_n_buckets)
-        }
-        for d in os.listdir(epoch_dir):
-            if not d.startswith(f"{BUCKET_COL}="):
-                continue
-            b = d.split("=", 1)[1]
-            buckets_map[b] = sorted(
-                f"{epoch_rel}/{d}/{f}"
-                for f in os.listdir(os.path.join(epoch_dir, d))
-                if f.endswith(".parquet")
-            )
-        bucket_bytes = {
-            b: sum(
-                os.path.getsize(os.path.join(self.root, f)) for f in fs
-            )
-            for b, fs in buckets_map.items()
-        }
-        manifest = {
-            **m,
-            "version": version,
-            "n_buckets": new_n_buckets,
-            "buckets": buckets_map,
-            "bucket_bytes": bucket_bytes,
-            # layout-only change (see rewrite_buckets): readers narrow
-            # across it instead of paying the cross-layout full-table diff
-            "row_preserving": True,
-        }
-        manifest.pop("changefeed_skip", None)
-        manifest.pop("forget_deletes", None)
-        manifest.pop("restored_from", None)
-        self._refresh_stats(
-            manifest,
-            m,
-            [f for fs in buckets_map.values() for f in fs],
-            m["schema"],
-            spark=spark,
+        self._write_buckets(
+            df.repartition(new_n_buckets, F.col(BUCKET_COL)),
+            manifest, range(new_n_buckets),
         )
-        manifest.pop("mor", None)  # full rewrite folds every delta layer
-        mpath = os.path.join(self.root, "manifests", f"v{version}.json")
-        _stamp_commit_ts(manifest)
-        with open(mpath + ".tmp", "w") as f:
-            json.dump(manifest, f)
-        os.replace(mpath + ".tmp", mpath)
-        with open(self.pointer_path + ".tmp", "w") as f:
-            json.dump({"version": version}, f)
-        os.replace(self.pointer_path + ".tmp", self.pointer_path)
+        self._publish(manifest, expected_version=version - 1)
         return {"version": version, "n_buckets": new_n_buckets}
 
     @_locked
@@ -2184,58 +2083,20 @@ class TableStore:
             return {"purged": 0, "version": self.current_version()}
         sel = sorted(int(r[BUCKET_COL]) for r in probe)
         n_purged = sum(r["count"] for r in probe)
-        version = self.current_version() + 1
-        epoch_rel = f"data/v{version}"
-        epoch_dir = os.path.join(self.root, epoch_rel)
-        shutil.rmtree(epoch_dir, ignore_errors=True)
+        version = self._next_version()
         df = (
             self.read_state(spark, buckets=sel, include_deleted=True)
             .filter(~expired_pred)
             .withColumn(BUCKET_COL, bucket_expr(m["n_buckets"]))
         )
-        (
-            df.repartition(len(sel), F.col(BUCKET_COL))
-            .write.mode("overwrite")
-            .partitionBy(BUCKET_COL)
-            .parquet(epoch_dir)
+        # replicas purge independently; this version must never be
+        # re-emitted as a batch of deletes by a cascade. A purge DROPS
+        # tombstone rows, so it is not row-preserving either.
+        manifest = self._successor(m, version=version, changefeed_skip=True)
+        self._write_buckets(
+            df.repartition(len(sel), F.col(BUCKET_COL)), manifest, sel
         )
-        buckets_map = dict(m["buckets"])
-        for b in sel:
-            d = os.path.join(epoch_dir, f"{BUCKET_COL}={b}")
-            buckets_map[str(b)] = sorted(
-                f"{epoch_rel}/{BUCKET_COL}={b}/{f}"
-                for f in (os.listdir(d) if os.path.isdir(d) else [])
-                if f.endswith(".parquet")
-            )
-        manifest = {
-            **m,
-            "version": version,
-            "buckets": buckets_map,
-            # replicas purge independently; this version must never be
-            # re-emitted as a batch of deletes by a cascade
-            "changefeed_skip": True,
-        }
-        manifest.pop("forget_deletes", None)
-        manifest.pop("restored_from", None)
-        # a purge DROPS tombstone rows — physical state differs, so an
-        # inherited row_preserving flag (e.g. from a preceding rewrite)
-        # would wrongly let an include_deleted diff narrow across it
-        manifest.pop("row_preserving", None)
-        self._refresh_stats(
-            manifest,
-            m,
-            [f for b in sel for f in buckets_map[str(b)]],
-            m["schema"],
-            spark=spark,
-        )
-        mpath = os.path.join(self.root, "manifests", f"v{version}.json")
-        _stamp_commit_ts(manifest)
-        with open(mpath + ".tmp", "w") as f:
-            json.dump(manifest, f)
-        os.replace(mpath + ".tmp", mpath)
-        with open(self.pointer_path + ".tmp", "w") as f:
-            json.dump({"version": version}, f)
-        os.replace(self.pointer_path + ".tmp", self.pointer_path)
+        self._publish(manifest, expected_version=version - 1)
         return {"purged": n_purged, "version": version, "buckets": sel}
 
     @_locked
@@ -2296,11 +2157,9 @@ class TableStore:
         if not keys and not repos:
             raise ValueError("forget_keys: pass keys=[(repo, path), ...] "
                              "and/or repos=[repo, ...]")
-        if self.staged_version() is not None:
-            raise ValueError(
-                "a staged (write-audit-publish) version is pending: "
-                "publish_staged() or abort_staged() before forgetting"
-            )
+        # refuses while a WAP version is staged: the history scrub below
+        # rewrites manifests even when the head holds no matching row
+        next_version = self._next_version()
         clones = [g for g in self.consumers() if g.startswith("clone:")]
         if clones and not force:
             raise ValueError(
@@ -2332,69 +2191,20 @@ class TableStore:
             .collect()
         )
         live_deleted = sum(r["count"] for r in probe)
-        version = self.current_version()
+        version = next_version - 1
         if probe:
             sel = sorted(int(r[BUCKET_COL]) for r in probe)
-            version = self.current_version() + 1
-            epoch_rel = f"data/v{version}"
-            epoch_dir = os.path.join(self.root, epoch_rel)
-            shutil.rmtree(epoch_dir, ignore_errors=True)
+            version = next_version
             df = (
                 self.read_state(spark, buckets=sel, include_deleted=True)
                 .filter(~_match_col())
                 .withColumn(BUCKET_COL, bucket_expr(nb_head))
             )
-            (
-                df.repartition(len(sel), F.col(BUCKET_COL))
-                .write.mode("overwrite")
-                .partitionBy(BUCKET_COL)
-                .parquet(epoch_dir)
+            manifest = self._successor(head_m, version=version)
+            self._write_buckets(
+                df.repartition(len(sel), F.col(BUCKET_COL)), manifest, sel
             )
-            buckets_map = dict(head_m["buckets"])
-            bucket_bytes = dict(head_m.get("bucket_bytes", {}))
-            for b in sel:
-                d = os.path.join(epoch_dir, f"{BUCKET_COL}={b}")
-                buckets_map[str(b)] = sorted(
-                    f"{epoch_rel}/{BUCKET_COL}={b}/{f}"
-                    for f in (os.listdir(d) if os.path.isdir(d) else [])
-                    if f.endswith(".parquet")
-                )
-                bucket_bytes[str(b)] = sum(
-                    os.path.getsize(os.path.join(self.root, f))
-                    for f in buckets_map[str(b)]
-                )
-            manifest = {
-                **head_m,
-                "version": version,
-                "buckets": buckets_map,
-                "bucket_bytes": bucket_bytes,
-            }
-            # a CoW replace of the dirty buckets subsumes any delta layers
-            mor_counts = dict(head_m.get("mor", {}))
-            for b in sel:
-                mor_counts.pop(str(b), None)
-            if mor_counts:
-                manifest["mor"] = mor_counts
-            else:
-                manifest.pop("mor", None)
-            manifest.pop("row_preserving", None)
-            manifest.pop("changefeed_skip", None)
-            manifest.pop("forget_deletes", None)  # new markers attached below
-            manifest.pop("restored_from", None)
-            self._refresh_stats(
-                manifest, head_m,
-                [f for b in sel for f in buckets_map[str(b)]],
-                head_m["schema"],
-                spark=spark,
-            )
-            mpath = os.path.join(self.root, "manifests", f"v{version}.json")
-            _stamp_commit_ts(manifest)
-            with open(mpath + ".tmp", "w") as f:
-                json.dump(manifest, f)
-            os.replace(mpath + ".tmp", mpath)
-            with open(self.pointer_path + ".tmp", "w") as f:
-                json.dump({"version": version}, f)
-            os.replace(self.pointer_path + ".tmp", self.pointer_path)
+            self._publish(manifest, expected_version=version - 1)
 
         # ---- step 2: history scrub over retained versions ----
         # candidate files: per-manifest bucket-hash pruning (layouts may
@@ -2502,15 +2312,9 @@ class TableStore:
             # the redaction is already surfaced — lagging changefeed
             # consumers see the delete markers and table_changes_cdf's
             # refusal triggers, instead of silently missing the scrub
-            head_path = os.path.join(
-                self.root, "manifests", f"v{version}.json"
-            )
-            with open(head_path) as f:
-                head_now = json.load(f)
+            head_now = self.manifest(version)
             head_now["forget_deletes"] = marker_rel
-            with open(head_path + ".tmp", "w") as f:
-                json.dump(head_now, f)
-            os.replace(head_path + ".tmp", head_path)
+            self._write_manifest(version, head_now)
         # else: the keys match nothing live, nothing in retained history,
         # and no prior marker exists — a marker would only poison
         # table_changes_cdf ranges with a redaction that removed zero rows
@@ -2606,10 +2410,7 @@ class TableStore:
                     else:
                         m.pop("stats", None)
             if changed:
-                mpath = os.path.join(self.root, "manifests", f"v{v}.json")
-                with open(mpath + ".tmp", "w") as f:
-                    json.dump(m, f)
-                os.replace(mpath + ".tmp", mpath)
+                self._write_manifest(v, m)
                 manifests_updated += 1
 
         # the merged marker supersedes a prior same-version marker file

@@ -92,6 +92,17 @@ def test_fsck_green_on_healthy_store_and_flags_each_corruption(
     store.remove_consumer("ghost")
     assert fsck(store)["ok"]
 
+    # W1: a staged (WAP) marker naming the head itself, then one naming
+    # the next version without a manifest
+    staged = os.path.join(store.root, "_staged")
+    head = store.current_version()
+    for sv in (head, head + 1):
+        json.dump({"version": sv}, open(staged, "w"))
+        r = fsck(store)
+        assert _errs(r, "W1"), r
+    os.remove(staged)
+    assert fsck(store)["ok"]
+
     # O1: plant an orphan parquet under data/
     orphan_dir = os.path.join(store.root, "data", "v999", "_bucket=0")
     os.makedirs(orphan_dir, exist_ok=True)

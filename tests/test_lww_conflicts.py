@@ -19,6 +19,7 @@ from pyspark.sql import Row
 
 from kp_data_replication_spark.operators.changefeed import cascade_catchup
 from kp_data_replication_spark.schema import CHANGELOG_SCHEMA
+from kp_data_replication_spark.sources.fsck import fsck
 from kp_data_replication_spark.sources.table_store import TableStore
 from kp_data_replication_spark.streaming.apply import (
     CdcApplyEngine,
@@ -349,6 +350,7 @@ def test_purge_tombstones_gc_and_cascade_skip(spark, tmp_path):
                              now_ms=del_ts + 7_200_000)
     assert res["purged"] == 1
     assert a.read_state(spark, include_deleted=True).count() == 0
+    assert fsck(a)["errors"] == []
 
     # the purge version is excluded from cascades: B applies nothing, keeps
     # its own tombstone until IT purges
@@ -363,3 +365,55 @@ def test_purge_tombstones_gc_and_cascade_skip(spark, tmp_path):
 
     b.purge_tombstones(spark, older_than_ms=3_600_000, now_ms=del_ts + 7_200_000)
     assert b.read_state(spark, include_deleted=True).count() == 0
+
+
+def test_purge_tombstones_folds_mor_layers_of_rewritten_buckets(spark, tmp_path):
+    """A purge rewrites whole buckets from their resolved read: the new
+    base files hold every layer, so the manifest must drop those buckets'
+    merge-on-read layer counts and record their new byte sizes."""
+    from pyspark.sql import functions as F
+    from pyspark.sql import types as T
+
+    from kp_data_replication_spark.schema import (
+        LWW_DELETED_COL,
+        LWW_TS_COL,
+        MOR_DELETED_COL,
+        MOR_V_COL,
+        ROW_SCHEMA,
+    )
+    from kp_data_replication_spark.sources.table_store import BUCKET_COL, bucket_expr
+
+    schema = T.StructType(ROW_SCHEMA.fields + [
+        T.StructField(LWW_TS_COL, T.LongType()),
+        T.StructField(LWW_DELETED_COL, T.BooleanType()),
+    ])
+
+    def rows(lo, hi):
+        dead = F.col("id") % 4 == 0
+        return spark.range(lo, hi).select(
+            F.lit("org/m").alias("repo"),
+            F.col("id").cast("string").alias("path"),
+            F.lit("c0").alias("commit"),
+            F.lit("py").alias("lang"),
+            F.when(~dead, F.concat(F.lit("body "), F.col("id"))).alias("content"),
+            F.lit(1_000).cast("long").alias(LWW_TS_COL),
+            dead.alias(LWW_DELETED_COL),
+        ).withColumn(BUCKET_COL, bucket_expr(4))
+
+    store = TableStore(str(tmp_path / "m"), n_buckets=4)
+    store.commit(rows(0, 40), [0, 1, 2, 3], [], epoch=1, row_schema=schema)
+    delta = (
+        rows(40, 60)
+        .withColumn(MOR_V_COL, F.lit(2).cast("long"))
+        .withColumn(MOR_DELETED_COL, F.lit(False))
+    )
+    store.commit(delta, [0, 1, 2, 3], [], epoch=2, row_schema=schema, mor=True)
+    assert store.current_manifest()["mor"]
+
+    res = store.purge_tombstones(spark, older_than_ms=0, now_ms=10**15)
+    assert res["purged"] == 15
+    m = store.current_manifest()
+    assert res["buckets"]
+    assert not {str(b) for b in res["buckets"]} & set(m.get("mor", {}))
+    assert fsck(store)["errors"] == []
+    assert store.read_state(spark, include_deleted=True).count() == 45

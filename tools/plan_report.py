@@ -22,13 +22,11 @@ from kp_data_replication_spark.functions.envelope import (  # noqa: E402
     unpack_envelope,
 )
 from kp_data_replication_spark.operators.compact import (  # noqa: E402
-    last_write_wins,
     lww_join_winners,
     lww_winners,
 )
 from kp_data_replication_spark.operators.dedup_cdc import filter_applied  # noqa: E402
 from kp_data_replication_spark.operators.filters import select_topics  # noqa: E402
-from kp_data_replication_spark.operators.merge import merge_upsert  # noqa: E402
 from kp_data_replication_spark.schema import LINEAGE_SCHEMA  # noqa: E402
 from kp_data_replication_spark.session import get_spark  # noqa: E402
 
@@ -67,31 +65,17 @@ def main() -> None:
     ))
 
     winners = lww_winners(rows, count_col="_n")
-    twophase = lww_join_winners(rows, winners, broadcast=True).withColumn(
+    compacted = lww_join_winners(rows, winners, broadcast=True).withColumn(
         "content", normalize_content(F.col("content"))
     )
     sections.append((
-        "Two-phase compaction (production path)",
+        "Compaction: slim winners + broadcast join-back (the apply path)",
         "Slim winner aggregate -> BroadcastExchange -> join-back over the "
         "un-shuffled wide rows -> key-dedup aggregate. Exactly 2 exchanges; "
         "the 1.1KiB content column crosses a shuffle only once (post-join), "
         "and the only Python is one ArrowEvalPython (content normalize) on "
         "the compacted survivors.",
-        formatted(twophase),
-    ))
-
-    direct = last_write_wins(rows, count_col="_n")
-    target = spark.createDataFrame(
-        [("r", "p", "c", "l", "x", 1)],
-        "repo string, path string, commit string, lang string, content string, stars int",
-    )
-    merged = merge_upsert(target, direct.drop("_n"))
-    sections.append((
-        "Direct compaction -> MERGE (steady-state upsert)",
-        "The compaction hash aggregate's output partitioning on (repo, path) "
-        "is exactly the partitioning the full-outer MERGE join requires: one "
-        "exchange per side, the compacted batch is never re-shuffled.",
-        formatted(merged),
+        formatted(compacted),
     ))
 
     lag_join = filter_applied(events, lineage.select("partition", "applied_lsn"))
