@@ -71,10 +71,10 @@ def lww_winners(
 ) -> DataFrame:
     """Phase 1 of the two-phase compaction: slim winner stubs — one row per
     key with (key cols, max(order), per-key stats), never the wide payload.
-    The shuffle carries a few dozen bytes per key. Materializing this
-    separately (persist + a scalar probe) is what lets the engine CHOOSE
-    the phase-2 join strategy from the actual winner-set size instead of
-    trusting configuration."""
+    The shuffle carries a few dozen bytes per key. The engine persists
+    these stubs and aggregates them once for its batch stats, which also
+    yields the actual winner-set size — so it CHOOSES the phase-2 join
+    strategy from that size instead of trusting configuration."""
     key_cols = key_cols or KEY_COLS
     aggs = [F.max(order_col).alias(order_col)]
     if count_col:

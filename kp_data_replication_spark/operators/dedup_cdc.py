@@ -10,13 +10,17 @@ docs/index.md:23, docs/consideration.md:37-48): an event is fresh iff its
 lsn exceeds the partition's applied high-water mark.
 
 Scale note: the lineage table has one row per log partition (thousands at
-most) — always broadcast; the dedup join is a map-side filter with no
-shuffle of the event stream.
+most). The apply path already holds it driver-side, so it filters with a
+literal per-partition map (:func:`above_watermarks`) and plans no join;
+:func:`filter_applied` is the DataFrame form for lineage that lives in a
+table — a broadcast join, also with no shuffle of the event stream.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame
+from collections.abc import Mapping
+
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import Window as W
 from pyspark.sql import functions as F
 
@@ -33,6 +37,25 @@ def filter_applied(events: DataFrame, lineage: DataFrame) -> DataFrame:
         .filter(F.col("lsn") > F.coalesce(F.col("applied_lsn"), F.lit(-1)))
         .drop("applied_lsn")
     )
+
+
+def above_watermarks(applied: Mapping[int, int | None]) -> Column:
+    """J3 as a predicate: ``lsn > coalesce(applied[partition], -1)``.
+
+    ``applied`` maps log partition -> applied lsn, read driver-side. The
+    map is a literal, so filtering with it plans no join and runs no
+    broadcast job. Same rows as :func:`filter_applied`: a partition with
+    no watermark (or a null one) passes every lsn >= 0, and a null-lsn
+    row is dropped (the comparison is NULL)."""
+    entries = [
+        x
+        for p, lsn in sorted(applied.items())
+        for x in (F.lit(p).cast("int"), F.lit(lsn).cast("long"))
+    ]
+    if not entries:
+        return F.col("lsn") > F.lit(-1)
+    watermark = F.create_map(*entries)[F.col("partition")]
+    return F.col("lsn") > F.coalesce(watermark, F.lit(-1))
 
 
 def applied_watermarks(events: DataFrame) -> DataFrame:

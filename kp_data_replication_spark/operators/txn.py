@@ -33,7 +33,8 @@ Exactly-once reasoning (crash windows):
   * The applied watermark advances past every lsn the gate consumed —
     delivered rows through the normal stats, withheld rows and markers
     through the gate's watermark fold — so a source redelivery is dropped
-    by ``filter_applied`` before the gate and can never double-stage.
+    by the watermark filter (``above_watermarks``) before the gate and
+    can never double-stage.
   * The withheld pool is a SNAPSHOT directory named by the table version
     at gate time (``snapshot=<v>``): a replay of a crashed epoch sees the
     same pre-attempt version, reads the same older snapshot, and

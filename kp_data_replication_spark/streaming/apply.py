@@ -13,13 +13,19 @@ distributed):
 
     changelog batch
       │ topic whitelist/blacklist (rlike, codegen)          F1-F3
-      │ lineage anti-filter (broadcast join, no shuffle)    J3
-      │ envelope unpack + content normalize (Arrow UDF)     F4/F7
-      │ last-write-wins per (repo,path) (hash agg,          A2/W2
-      │   map-side partial, output partitioned on key)
-      │ dirty-bucket MERGE (full-outer join; only buckets   J2/S6
+      │ lineage watermark filter (literal per-partition     J3
+      │   map read driver-side — no join, no broadcast)
+      │ envelope unpack (rows persisted for the attempt)    F4
+      │ last-write-wins per (repo,path): slim winner stubs  A2/W2
+      │   (hash agg, map-side partial) + their bucket
+      │ ONE stats action over the stubs: dirty buckets,     A1
+      │   watermarks, affinity audit, broadcast estimate
+      │ join-back + content normalize (Arrow UDF) + dirty-  F7/J2/S6
+      │   bucket MERGE in the write job (only buckets
       │   touched by the batch are read & rewritten)
       └ atomic commit: data + lineage + epoch               S7/S8/T3/T4
+
+Two Spark actions per apply: the stats aggregate and the merge write.
 
 Restart/resume (T1/T2): Structured Streaming's checkpoint replays the last
 uncommitted batch with the SAME epoch id; the store fences on
@@ -47,7 +53,7 @@ from ..operators.constraints import (
     check_envelope,
     stamp_violated_header,
 )
-from ..operators.dedup_cdc import filter_applied
+from ..operators.dedup_cdc import above_watermarks
 from ..operators.filters import DEFAULT_BLACKLIST, select_topics
 from ..operators.smt import SmtError, apply_smt_chain, compile_smt_chain
 from ..schema import DEFAULT_GROUP, MOR_DELETED_COL, MOR_V_COL
@@ -83,9 +89,9 @@ class EngineConfig:
     # autoBroadcastJoinThreshold while applying a batch: the winner set of
     # a typical micro-batch is tens of MB — worth broadcasting well past
     # Spark's 10MB default. Set None to leave the session value untouched.
-    # Also the compaction's broadcast budget: each batch materializes the
-    # slim phase-1 winner stubs, probes their actual count/key-bytes, and
-    # broadcasts the join-back only if the estimate fits — a giant batch
+    # Also the compaction's broadcast budget: the batch's one stats action
+    # over the slim phase-1 winner stubs also sums their count/key-bytes,
+    # and the join-back broadcasts only if the estimate fits — a giant batch
     # degrades to a shuffle join instead of OOMing the driver.
     broadcast_threshold: str | None = "256m"
     # hot-BUCKET write salting (reference skew discussion,
@@ -377,10 +383,6 @@ class CdcApplyEngine:
             if (r.get("consumer_group") or DEFAULT_GROUP) != group
         ]
         applied_before = {r["partition"]: r["applied_lsn"] for r in lineage_rows}
-        lineage = spark.createDataFrame(
-            [(r["partition"], r["applied_lsn"]) for r in lineage_rows],
-            "partition int, applied_lsn long",
-        )
         unseq = None
         if config.dlq_dir:
             # null-lsn envelopes are unsequenceable: the watermark dedup's
@@ -392,7 +394,7 @@ class CdcApplyEngine:
             # idempotent epoch=N directory).
             unseq = events.filter(F.col("lsn").isNull())
             events = events.filter(F.col("lsn").isNotNull())
-        fresh = filter_applied(events, lineage)
+        fresh = events.filter(above_watermarks(applied_before))
 
         txn_marks: dict[int, int] = {}
         txn_counters: dict = {}
@@ -562,58 +564,26 @@ class CdcApplyEngine:
         has_bytes = "content" in rows.columns
         if has_bytes:
             extra["_bytes_fresh"] = F.sum(F.length("content"))
-        # materialize the slim phase-1 winners and probe their REAL size;
-        # the probe's aggregation scan is work phase 2 needed anyway (the
-        # winners side of the join) — it is paid once, into the cache — so
-        # choosing the join costs one extra pass over cached slim stubs,
-        # not an extra raw-batch scan
-        winners_cached = lww_winners(
+        # the batch is evaluated once: a replica's input is a lazy
+        # changefeed diff (a join of two bucket reads) that both the stats
+        # job and the join-back inside the write would otherwise recompute
+        rows = rows.persist()
+        # slim phase-1 winner stubs, one per key, tagged with their bucket
+        stubs = lww_winners(
             rows, order_col=order_col, count_col="_n_fresh",
             extra_aggs=extra,
-        ).persist()
-        probe = winners_cached.agg(
-            F.count(F.lit(1)).alias("n"),
-            F.sum(
-                F.octet_length(F.concat_ws("", F.col("repo"), F.col("path")))
-            ).alias("key_bytes"),
-        ).first()
-        n_win = probe["n"] or 0
-        # broadcast-side estimate: raw key bytes + per-row JVM/agg-col
-        # overhead, times 4 for the broadcast hash relation's expansion
-        est = 4 * (
-            (probe["key_bytes"] or 0)
-            + n_win * (16 * len(winners_cached.columns) + 48)
         )
-        budget = _parse_size_bytes(config.broadcast_threshold) or (256 << 20)
-        use_broadcast = est <= budget
-        compact_path = "broadcast" if use_broadcast else "shuffle"
-        compacted = lww_join_winners(
-            rows, winners_cached, order_col=order_col,
-            broadcast=use_broadcast,
-        )
-        compacted = compacted.withColumn(
+        winners_cached = stubs.withColumn(
             BUCKET_COL, bucket_expr(self.store.n_buckets)
-        )
-        compacted = compacted.cache()
-        # normalization AFTER the cache point: the stats job below
-        # materializes the un-normalized cache (normalization cannot change
-        # the winner — it is chosen by lsn — nor the stats, which were
-        # folded from the raw batch upstream), so the Arrow NFC pass runs
-        # exactly once, inside the single merge-write job, overlapped with
-        # the write instead of serializing the stats materialization.
-        # (A "hybrid" JVM-CRLF + filtered-NFC variant was measured at the
-        # same speed on an ASCII corpus while splitting the bucket-
-        # clustered output into two files per bucket — not worth it.)
-        batch_source = compacted
-        if config.normalize and "content" in compacted.columns:
-            batch_source = compacted.withColumn(
-                "content", normalize_content(F.col("content"))
-            )
+        ).persist()
         try:
-            # ONE job materializes the cache and yields, per (bucket,
-            # partition): dirty buckets, changed-key count, AND the applied
-            # watermarks — no separate marks job, no second raw-batch scan
-            # (the per-partition max lsn necessarily survives compaction)
+            # ONE aggregate over the slim stubs yields, per (bucket,
+            # partition): dirty buckets, changed-key count, the applied
+            # watermarks, the affinity audit and the broadcast estimate's
+            # key bytes. The
+            # wide join-back runs once, inside the merge-write job. A key
+            # obeying affinity has _pmin == _pmax; one that does not raises
+            # below, so grouping on _pmax is grouping on its partition.
             stat_aggs = [
                 F.count(F.lit(1)).alias("n_keys"),
                 # under LWW ordering the winner's own lsn may not be the
@@ -625,11 +595,18 @@ class CdcApplyEngine:
                 F.sum(
                     F.when(F.col("_pmax") > F.col("_pmin"), 1).otherwise(0)
                 ).alias("n_affinity_violations"),
+                F.sum(
+                    F.octet_length(F.concat_ws("", F.col("repo"), F.col("path")))
+                ).alias("key_bytes"),
             ]
             if has_bytes:
                 stat_aggs.append(F.sum("_bytes_fresh").alias("bytes_fresh"))
             stats = (
-                compacted.groupBy(BUCKET_COL, "partition").agg(*stat_aggs).collect()
+                winners_cached.groupBy(
+                    BUCKET_COL, F.col("_pmax").alias("partition")
+                )
+                .agg(*stat_aggs)
+                .collect()
             )
             n_violations = sum(r["n_affinity_violations"] for r in stats)
             if n_violations:
@@ -643,6 +620,27 @@ class CdcApplyEngine:
                 )
             dirty = sorted({r[BUCKET_COL] for r in stats})
             n_changed = sum(r["n_keys"] for r in stats)
+            # broadcast-side estimate: raw key bytes + per-row JVM/agg-col
+            # overhead, times 4 for the broadcast hash relation's expansion;
+            # a winner set over budget degrades to a shuffle join-back
+            est = 4 * (
+                sum(r["key_bytes"] or 0 for r in stats)
+                + n_changed * (16 * len(stubs.columns) + 48)
+            )
+            budget = _parse_size_bytes(config.broadcast_threshold) or (256 << 20)
+            compact_path = "broadcast" if est <= budget else "shuffle"
+            compacted = lww_join_winners(
+                rows, winners_cached.drop(BUCKET_COL), order_col=order_col,
+                broadcast=compact_path == "broadcast",
+            )
+            # normalization (an Arrow NFC pass) cannot change the winner —
+            # it is chosen by lsn — nor the stats above, so it runs once,
+            # inside the merge-write job, overlapped with the write
+            batch_source = compacted
+            if config.normalize and "content" in compacted.columns:
+                batch_source = compacted.withColumn(
+                    "content", normalize_content(F.col("content"))
+                )
             marks: dict[int, dict] = {}
             for r in stats:
                 m = marks.setdefault(
@@ -917,8 +915,8 @@ class CdcApplyEngine:
             summary["phases"] = phases
             return summary
         finally:
-            compacted.unpersist()
             winners_cached.unpersist()
+            rows.unpersist()
 
     # ------------------------------------------------------------------ #
     @staticmethod
@@ -1025,8 +1023,9 @@ class CdcApplyEngine:
         MM2 JMX metric set record-count/record-age-ms/replication-latency-ms
         (mirror-maker-2/mm2-jmx-exporter.yaml:28-43). Non-transactional
         append — monitoring data, not engine state. ``marks`` comes from the
-        compacted cache, so this adds exactly one raw-batch scan (for the
-        duplicate/byte totals that dedup necessarily discards).
+        stats action over the winner stubs, so this adds exactly one raw-batch
+        scan (for the duplicate/byte totals that dedup necessarily
+        discards).
 
         Scale note: the raw-batch scan here reads ONLY slim columns
         (partition/lsn/ts_ms — a few bytes per event after parquet column

@@ -16,6 +16,9 @@ from kp_data_replication_spark.sources.fsck import fsck
 from kp_data_replication_spark.sources.table_store import TableStore
 from kp_data_replication_spark.streaming.apply import CdcApplyEngine, EngineConfig
 
+# the checkout these tests belong to: its CLI is the one the subprocesses run
+REPO_ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+
 
 def _build(spark, tmp_path, name="t"):
     d = str(tmp_path / "cl")
@@ -144,11 +147,11 @@ def test_fsck_cli_exit_codes(spark, tmp_path):
     import sys
 
     store = _build(spark, tmp_path, name="t3")
-    env = dict(os.environ, PYTHONPATH="/root/repo")
+    env = dict(os.environ, PYTHONPATH=REPO_ROOT)
     out = subprocess.run(
         [sys.executable, "-m", "kp_data_replication_spark.cli",
          "fsck", store.root],
-        capture_output=True, text=True, env=env, cwd="/root/repo",
+        capture_output=True, text=True, env=env, cwd=REPO_ROOT,
     )
     assert out.returncode == 0, out.stderr[-2000:]
     rep = json.loads(out.stdout.strip().splitlines()[-1])
@@ -161,7 +164,7 @@ def test_fsck_cli_exit_codes(spark, tmp_path):
     out = subprocess.run(
         [sys.executable, "-m", "kp_data_replication_spark.cli",
          "fsck", store.root],
-        capture_output=True, text=True, env=env, cwd="/root/repo",
+        capture_output=True, text=True, env=env, cwd=REPO_ROOT,
     )
     assert out.returncode == 1
     rep = json.loads(out.stdout.strip().splitlines()[-1])
@@ -217,7 +220,7 @@ def test_describe_reports_snapshot_and_version_log(spark, tmp_path):
         [sys.executable, "-m", "kp_data_replication_spark.cli",
          "describe", store.root],
         capture_output=True, text=True,
-        env=dict(os.environ, PYTHONPATH="/root/repo"), cwd="/root/repo",
+        env=dict(os.environ, PYTHONPATH=REPO_ROOT), cwd=REPO_ROOT,
     )
     assert out.returncode == 0, out.stderr[-1500:]
     rep = _json.loads(out.stdout.strip().splitlines()[-1])

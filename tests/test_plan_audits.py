@@ -845,3 +845,113 @@ def test_fork_pairs_equijoin_only_no_cartesian(spark):
     assert "CartesianProduct" not in plan, plan
     assert "SinglePartition" not in plan, plan
     assert_no_row_python(out)
+
+
+def _epoch(spark, path, n_keys, version, lsn0):
+    """One parquet file of ``n_keys`` events over 4 log partitions (key k
+    lives on partition k % 4): creates at version 0, updates after."""
+    from pyspark.sql import Row
+
+    from kp_data_replication_spark.schema import CHANGELOG_SCHEMA
+
+    rows = [
+        Row(
+            partition=k % 4,
+            lsn=lsn0 + k,
+            op="c" if version == 0 else "u",
+            before=None,
+            after=Row(
+                repo=f"org/r{k % 7}",
+                path=f"src/file_{k}.py",
+                commit=f"c{version}",
+                lang="py",
+                content=f"content-{k}-v{version}",
+            ),
+            ts_ms=None,
+            headers=None,
+            source_topic="repos",
+        )
+        for k in range(n_keys)
+    ]
+    spark.createDataFrame(rows, CHANGELOG_SCHEMA).write.parquet(path)
+    return spark.read.schema(CHANGELOG_SCHEMA).parquet(path)
+
+
+def test_warm_apply_runs_one_stats_job_plus_the_write(spark, tmp_path):
+    """A warm copy-on-write apply runs one aggregate over the slim winner
+    stubs plus the merge write: no broadcast-size probe, no materialized
+    full-width join-back, no lineage join. On a 4-bucket table (bootstrap,
+    then one update epoch of 200 keys) the update's apply ran 14 Spark
+    jobs with the probe + wide-cache stats + write plan and runs 10 with
+    the one-stats-action plan."""
+    from kp_data_replication_spark.sources.table_store import TableStore
+    from kp_data_replication_spark.streaming.apply import (
+        CdcApplyEngine,
+        EngineConfig,
+    )
+
+    store = TableStore(str(tmp_path / "t"), n_buckets=4)
+    engine = CdcApplyEngine(store, EngineConfig(metrics=False))
+    boot = engine.apply_batch(_epoch(spark, str(tmp_path / "e0"), 200, 0, 0), 0)
+    assert boot["status"] == "committed"
+    update = _epoch(spark, str(tmp_path / "e1"), 200, 1, 1000)
+
+    sc = spark.sparkContext
+    gid = "plan-audit-warm-apply"
+    sc.setJobGroup(gid, "warm apply")
+    try:
+        out = engine.apply_batch(update, 1)
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    n_jobs = len(sc.statusTracker().getJobIdsForGroup(gid))
+    assert out["status"] == "committed" and out["keys_changed"] == 200
+    assert out["compact_path"] == "broadcast"
+    assert n_jobs < 14, n_jobs
+
+
+def test_watermark_filter_is_a_literal_predicate_not_a_join(spark):
+    """J3 on the apply path: the lineage is read driver-side, so the fresh
+    filter is a literal map lookup — no join, no broadcast job."""
+    from kp_data_replication_spark.operators.dedup_cdc import above_watermarks
+
+    events = spark.createDataFrame(
+        [(0, 3), (1, 9)], "partition int, lsn long"
+    )
+    fresh = events.filter(above_watermarks({0: 5, 1: 2}))
+    plan = plan_string(fresh)
+    assert "Join" not in plan, plan
+    assert "BroadcastExchange" not in plan, plan
+    assert [tuple(r) for r in fresh.collect()] == [(1, 9)]
+
+
+def test_watermark_predicate_keeps_the_rows_filter_applied_keeps(spark):
+    """Parity with the broadcast-join form: a partition with no lineage row
+    (or a null watermark) passes every lsn >= 0, a null-lsn row is
+    dropped, and an event at the watermark is already applied."""
+    from kp_data_replication_spark.operators.dedup_cdc import above_watermarks
+
+    events = spark.createDataFrame(
+        [
+            (0, 4, "a"), (0, 5, "b"), (0, 6, "c"),  # watermark 5
+            (1, 0, "d"), (1, 1, "e"),  # watermark 0
+            (2, 0, "f"), (2, 7, "g"),  # no lineage row
+            (3, 0, "h"),  # null watermark
+            (0, None, "i"), (2, None, "j"),  # unsequenceable
+        ],
+        "partition int, lsn long, v string",
+    )
+    applied = {0: 5, 1: 0, 3: None}
+    lineage = spark.createDataFrame(
+        list(applied.items()), "partition int, applied_lsn long"
+    )
+    want = sorted(tuple(r) for r in filter_applied(events, lineage).collect())
+    got = sorted(tuple(r) for r in events.filter(above_watermarks(applied)).collect())
+    assert got == want == [
+        (0, 6, "c"), (1, 1, "e"), (2, 0, "f"), (2, 7, "g"), (3, 0, "h"),
+    ]
+    # no lineage at all: everything sequenceable is fresh
+    empty = spark.createDataFrame([], "partition int, applied_lsn long")
+    assert sorted(
+        tuple(r) for r in events.filter(above_watermarks({})).collect()
+    ) == sorted(tuple(r) for r in filter_applied(events, empty).collect())
